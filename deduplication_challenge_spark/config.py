@@ -137,6 +137,12 @@ class DedupConfig:
             raise ValueError(
                 f"checkpoint_mode must be 'local' or 'reliable', got {self.checkpoint_mode!r}"
             )
+        # minhash values live in [0, p]; verify ships them as array<int>, so
+        # a larger prime would wrap there and corrupt jaccard_est
+        if self.minhash_prime > 2**31 - 1:
+            raise ValueError(
+                f"minhash_prime must be <= 2**31 - 1, got {self.minhash_prime}"
+            )
         if self.line_dedup_min_docs is not None and self.line_dedup_min_docs < 2:
             raise ValueError(
                 f"line_dedup_min_docs must be None or >= 2, got {self.line_dedup_min_docs}"

@@ -40,12 +40,13 @@ def verify_pairs(
     materialize downstream.
     """
     # Shuffle-payload compression (guide §2.3 "shuffle fewer bytes —
-    # narrower types"): minhash values live in [0, p] with p = 2^31 - 1 =
-    # int32 max, so the join-side projection casts the int64 array to
-    # array<int> — every positional equality, and therefore jaccard_est,
-    # is bit-identical while the signature payload that crosses BOTH join
-    # shuffles halves (~1 KB -> ~0.5 KB per row at num_perm=128).  The
-    # stored signatures table keeps its int64 schema.
+    # narrower types"): minhash values live in [0, p] with p <= 2^31 - 1 =
+    # int32 max (DedupConfig rejects a larger prime), so the join-side
+    # projection casts the int64 array to array<int> — every positional
+    # equality, and therefore jaccard_est, is bit-identical while the
+    # signature payload that crosses BOTH join shuffles halves (~1 KB ->
+    # ~0.5 KB per row at num_perm=128).  The stored signatures table keeps
+    # its int64 schema.
     sigs = signatures.select(
         "doc_id", F.transform("minhash", lambda x: x.cast("int")).alias("minhash")
     )

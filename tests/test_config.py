@@ -78,3 +78,11 @@ def test_stream_duration_parse():
         _duration_ms("1h")
     with pytest.raises(ValueError, match="unsupported duration"):
         _duration_ms("soon")
+
+
+def test_minhash_prime_bounded_by_int32():
+    """verify ships minhash values as array<int>; a larger prime would wrap
+    there and corrupt jaccard_est."""
+    with pytest.raises(ValueError, match="minhash_prime"):
+        DedupConfig(minhash_prime=2**31 + 11)
+    assert DedupConfig(minhash_prime=2**31 - 1).minhash_prime == 2**31 - 1

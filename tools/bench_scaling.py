@@ -87,11 +87,12 @@ def one_run(cpus: int) -> dict:
     """One timed pipeline run in THIS process (invoked as --worker)."""
     from deduplication_challenge_spark.config import DedupConfig
     from deduplication_challenge_spark.plans.pipeline import DedupPipeline
-    from deduplication_challenge_spark.session import build_session
+    from deduplication_challenge_spark.session import build_session, jvm_flags
 
     spark = build_session(
         f"scaling-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus * 2
     )
+    flags = jvm_flags(spark)
     pages = spark.read.parquet(CORPUS_DIR)
     n_docs = pages.count()
     workdir = tempfile.mkdtemp(prefix=f"dedup_scale_{cpus}_")
@@ -113,6 +114,7 @@ def one_run(cpus: int) -> dict:
         "docs_per_sec": round(n_docs / e2e, 1),
         "canonical": n_out,
         "stages": {k: round(v.seconds, 2) for k, v in report.stages.items()},
+        "jvm_flags": flags,
     }
 
 
