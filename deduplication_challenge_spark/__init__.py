@@ -8,11 +8,13 @@ re-expressed as idiomatic Spark DataFrame transforms + vectorized Arrow UDFs,
 extended to web-scale near-dup detection per the north rule:
 
 - exact dedup (hash groupBy)                  -> operators.exact
-- k-shingle MinHash + LSH banding             -> operators.minhash / operators.lsh
+- k-shingle MinHash + LSH banding             -> operators.signatures / operators.lsh
 - 64-bit SimHash + Hamming refinement         -> operators.simhash
-- suffix-array exact-substring pass           -> operators.suffixarray
+- exact-substring pass (global anchor join)   -> operators.suffixarray
 - Jaccard verification of candidate pairs     -> operators.verify
-- connected components (large/small-star)     -> operators.connected_components
+- connected components (Arrow union-find      -> operators.connected_components
+  contraction; large/small-star rounds only
+  when contraction stalls)
 - per-cluster canonical-record consolidation  -> operators.consolidate
   (the reference's merge-policy contract: uniqueness + max information,
   /root/reference/README.md:3-4, /root/reference/src/main.py:21-73)

@@ -29,16 +29,7 @@ class DedupConfig:
     seed: int = 42
     # --- verification -----------------------------------------------------
     jaccard_threshold: float = 0.70    # estimated-Jaccard acceptance for LSH pairs
-    # --- LSH pair generation ----------------------------------------------
-    # 'star': connect every bucket member to the bucket-min doc_id (B-1 edges
-    #   per bucket — no quadratic blowup, the only plan that survives hot
-    #   boilerplate buckets at 10^12 docs).
-    # 'all_pairs': full intra-bucket pair enumeration, capped per bucket —
-    #   exactness reference for small-scale tests.
-    pair_mode: str = "star"
-    bucket_cap: int = 512              # all_pairs mode: max bucket size enumerated
     # --- SimHash ----------------------------------------------------------
-    simhash_bits: int = 64
     hamming_k: int = 3                 # accept pairs with Hamming distance <= k
     simhash_window: int = 4            # permute-and-sort neighbor window (Manku WWW'07)
     simhash_hot_threshold: int = 100_000  # (chunk_idx, chunk_val) groups larger than
@@ -49,16 +40,6 @@ class DedupConfig:
                                        # (sign-flipped) simhash sort order
     # --- suffix-array substring pass ---------------------------------------
     substr_min_len: int = 48           # chars of shared substring to count as dup
-    substr_scope: str = "global"       # 'global': cross-partition anchor equi-join
-                                       # (partition-layout-independent output, no
-                                       # co-location needed — matches the oracle's
-                                       # global semantics); 'partition': local
-                                       # kernels (no anchor shuffle, optional char
-                                       # verification, documented approximation)
-    substr_partitions: int = 32        # partition-local scope only — PINNED (not
-                                       # core-derived): local results depend on
-                                       # co-location, so a fixed count keeps output
-                                       # identical across parallelism levels
     substr_winnow_window: int = 64     # anchor-sampling window W: detection
                                        # guaranteed for shared runs >=
                                        # min_len+W-1 chars (111 at defaults);
@@ -72,11 +53,10 @@ class DedupConfig:
                                        # substring edges are redundant with
                                        # LSH/SimHash edges)
     substr_verify: bool = False        # char-level verification of hash-equal
-                                       # windows, honored in BOTH scopes
-                                       # (2^-64 collision odds without; local
-                                       # kernels pay gather traffic, the
-                                       # global pass ships the min_len-char
-                                       # window through the anchor shuffle)
+                                       # windows (2^-64 collision odds
+                                       # without; the anchor pass ships the
+                                       # min_len-char window through the
+                                       # anchor shuffle)
     # --- signatures ---------------------------------------------------------
     emit_fingerprints: bool = False    # winnowing fingerprints are an optional
                                        # output (doc-fingerprint op); the dedup
@@ -121,10 +101,6 @@ class DedupConfig:
             raise ValueError(
                 f"bands*rows ({self.bands}*{self.rows}) must equal num_perm ({self.num_perm})"
             )
-        if self.pair_mode not in ("star", "all_pairs"):
-            raise ValueError(f"unknown pair_mode {self.pair_mode!r}")
-        if self.substr_scope not in ("global", "partition"):
-            raise ValueError(f"unknown substr_scope {self.substr_scope!r}")
         # JVM shifts are mod-64: split_bits=0 would make the Spark salt a
         # no-op-shift of the full hash (shattering hot groups) while the
         # Python oracle computes >> 64 == 0 (no split) — forbid the whole
@@ -147,15 +123,12 @@ class DedupConfig:
             raise ValueError(
                 f"line_dedup_min_docs must be None or >= 2, got {self.line_dedup_min_docs}"
             )
-        # the 64-bit width is structural, not tunable: simhash64, the
-        # oracle's hamming_chunks, and the hot-group salt shift all assume
-        # 64 — a different value would silently break engine/oracle parity
-        if self.simhash_bits != 64:
-            raise ValueError(f"simhash_bits must be 64, got {self.simhash_bits}")
-        if self.simhash_bits % (self.hamming_k + 1) != 0:
+        # the simhash is 64 bits (operators/simhash.SIMHASH_BITS), split
+        # into hamming_k+1 equal pigeonhole chunks
+        if 64 % (self.hamming_k + 1) != 0:
             raise ValueError(
-                f"simhash_bits ({self.simhash_bits}) must divide evenly into "
-                f"hamming_k+1 ({self.hamming_k + 1}) chunks"
+                f"hamming_k+1 ({self.hamming_k + 1}) must divide the 64-bit "
+                f"simhash into equal chunks"
             )
 
     def config_hash(self) -> str:

@@ -1,5 +1,4 @@
-"""Minimal pure-Python WAV (RIFF/PCM) codec so the multimodal path has a
-REAL audio decode step in this container (no torchaudio/soundfile shipped).
+"""Minimal pure-Python WAV (RIFF/PCM) codec; no audio library is required.
 
 Implemented from the public RIFF/WAVE format description only: classic
 RIFF container ("RIFF" size "WAVE"), `fmt ` chunk with format tag 1
@@ -9,9 +8,8 @@ can generate inputs without any external library; decode(encode(x)) == x is
 pinned sample-for-sample.
 
 This is NOT a general-purpose library: IEEE-float (tag 3), ADPCM,
-extensible (tag 0xFFFE), and 24/32-bit PCM are rejected with ValueError
-(callers treat undecodable payloads as opaque bytes), mirroring
-functions/imagecodec.py's contract.
+extensible (tag 0xFFFE), and 24/32-bit PCM are rejected with ValueError,
+mirroring functions/imagecodec.py's contract.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Minimal pure-Python image codecs (PNG + BMP) so the multimodal path has a
-REAL decode step in this container (no Pillow shipped).
+"""Minimal pure-Python image codecs (PNG + BMP); no imaging library is
+required.
 
 Implemented from the public specs only: PNG per RFC 2083 / W3C PNG (8-bit
 depth, color types 0 gray / 2 RGB / 4 gray+alpha / 6 RGBA, non-interlaced,
@@ -8,8 +8,7 @@ BITMAPINFOHEADER BMP.  Encoders exist so tests can generate inputs without
 any external library; decode(encode(x)) == x is pinned byte-for-byte.
 
 This is NOT a general-purpose library: palette PNGs, 16-bit depth,
-interlacing, and compressed BMPs are rejected with ValueError (callers treat
-undecodable payloads as opaque bytes).
+interlacing, and compressed BMPs are rejected with ValueError.
 """
 
 from __future__ import annotations
@@ -136,8 +135,8 @@ def decode_png(data: bytes) -> np.ndarray:
     expected = height * (stride + 1)
     # BOUNDED decompression: an unbounded zlib.decompress would let a tiny
     # crafted payload (zlib bomb) materialize gigabytes before the size
-    # check and OOM-kill the executor — cap at expected+1 and reject
-    # overlong streams as malformed (the opaque-bytes fallback path)
+    # check and OOM-kill the process — cap at expected+1 and reject
+    # overlong streams as malformed
     d = zlib.decompressobj()
     raw = np.frombuffer(d.decompress(bytes(idat), expected + 1), dtype=np.uint8)
     if len(raw) != expected or (
@@ -239,28 +238,15 @@ def probe_image(data: bytes) -> tuple[str, int, int, int] | None:
     b = probe_bmp(data)
     if b is not None:
         return ("bmp", *b)
-    from deduplication_challenge_spark.functions.jpegcodec import probe_jpeg
-
-    j = probe_jpeg(data)
-    if j is not None:
-        return ("jpeg", *j)
     return None
 
 
 def decode_image(data: bytes) -> np.ndarray | None:
-    """Decode PNG/BMP/JPEG payloads to (H, W, C) uint8; None when the
-    payload is not a supported image (callers fall back to opaque-bytes
-    treatment).  JPEG decode covers baseline, extended-sequential and
-    progressive Huffman streams (functions/jpegcodec.py); arithmetic-coded
-    streams probe (dims readable) but raise on decode, landing on the same
-    opaque fallback."""
+    """Decode PNG/BMP payloads to (H, W, C) uint8; None when the payload is
+    not a supported image."""
     meta = probe_image(data)
     if meta is None:
         return None
     if meta[0] == "png":
         return decode_png(data)
-    if meta[0] == "bmp":
-        return decode_bmp(data)
-    from deduplication_challenge_spark.functions.jpegcodec import decode_jpeg
-
-    return decode_jpeg(data)
+    return decode_bmp(data)

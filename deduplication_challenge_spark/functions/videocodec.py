@@ -1,5 +1,4 @@
-"""Minimal pure-Python AVI (RIFF) codec so the multimodal path has a REAL
-video decode step in this container (no pyav/ffmpeg shipped).
+"""Minimal pure-Python AVI (RIFF) codec; no video library is required.
 
 Implemented from the public RIFF/AVI container description only (Microsoft
 "AVI RIFF File Reference" / OpenDML): outer ``RIFF size 'AVI '`` form, a
@@ -13,8 +12,8 @@ is pinned frame-for-frame.
 
 This is NOT a general-purpose library: compressed streams (``00dc`` with a
 real codec fourcc), audio streams, palettized frames, and OpenDML index
-structures are rejected with ValueError / probe None, and callers treat the
-payload as opaque bytes — mirroring the imagecodec/audiocodec contract.
+structures are rejected with ValueError / probe None, mirroring the
+imagecodec/audiocodec contract.
 """
 
 from __future__ import annotations

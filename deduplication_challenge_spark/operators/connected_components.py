@@ -1,9 +1,13 @@
-"""Connected components via alternating large-star / small-star joins.
+"""Connected components: Arrow union-find contraction, star joins as fallback.
 
-Implements the MapReduce CC algorithm of Kiveris et al. ("Connected
-Components in MapReduce and Beyond", SoCC 2014) as a driver loop of
-DataFrame joins — O(log n) rounds, each a groupBy(min) + equi-join, no
-graphframes dependency (absent from this sandbox, SURVEY.md §7.0).
+Each partition's edges are contracted by a vectorized union-find kernel
+(``_local_contract``); the contracted set is re-contracted at coarser
+partitioning until it fits one task, where one more pass is the global
+fixpoint. Only when contraction stalls (the 100 TB case) does it fall
+back to the MapReduce CC algorithm of Kiveris et al. ("Connected
+Components in MapReduce and Beyond", SoCC 2014): alternating large-star /
+small-star rounds of DataFrame joins, each a groupBy(min) + equi-join. No
+graphframes dependency (SURVEY.md §7.0).
 
 Per-iteration ``localCheckpoint(eager=True)`` truncates lineage so the plan
 doesn't grow unboundedly across the fixpoint loop (Catalyst optimizes single

@@ -2,17 +2,12 @@
 
 Key scale decision (SURVEY.md §4.3.1): a bucket of B docs holds B(B-1)/2
 pairs — boilerplate-heavy buckets at 10^12 docs would emit quadrillions of
-pairs. Default ``pair_mode='star'`` therefore connects every bucket member to
-the bucket's MIN doc_id: B-1 edges per bucket, linear always. For connected-
-components clustering a star spans exactly the same component as the clique,
-and bucket co-membership already certifies band-level signature agreement.
+pairs. Every bucket member is therefore connected to the bucket's MIN
+doc_id: B-1 edges per bucket, linear always. For connected-components
+clustering a star spans exactly the same component as the clique, and
+bucket co-membership already certifies band-level signature agreement.
 The pure-Python oracle implements the identical rule, so recall goldens are
 apples-to-apples.
-
-``pair_mode='all_pairs'`` enumerates full intra-bucket pairs for buckets up
-to ``bucket_cap`` (exactness reference at test scale); oversized buckets
-still contribute star edges and are COUNTED via the returned stats frame —
-no silent caps.
 
 Skew notes: the groupBy(min) uses map-side partial aggregation, so a hot
 bucket key costs one combiner per task, not a shuffled megagroup; the
@@ -39,10 +34,10 @@ def band_table(signatures: DataFrame) -> DataFrame:
 
 
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
-    """bands -> (edges(src, dst) with src < dst, stats).
+    """bands -> (star edges(src, dst) with src = bucket min < dst, stats).
 
-    stats: one row — (buckets, multi_buckets, capped_buckets) so no pair loss
-    is ever silent.
+    stats: one row — (buckets, multi_buckets), recorded in the stage
+    manifest.
     """
     # lazy checkpoint: the bucket aggregate feeds the edge join AND the
     # stats frame (collected later for the stage manifest) — one shuffle
@@ -50,39 +45,14 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, Data
     buckets = bands.groupBy("band_idx", "band_hash").agg(
         F.min("doc_id").alias("root"), F.count("*").alias("bucket_size")
     ).localCheckpoint(eager=False)
-    multi = buckets.where(F.col("bucket_size") >= 2)
-
     stats = buckets.agg(
         F.count("*").alias("buckets"),
         F.sum((F.col("bucket_size") >= 2).cast("long")).alias("multi_buckets"),
-        F.sum((F.col("bucket_size") > cfg.bucket_cap).cast("long")).alias("capped_buckets"),
     )
-
-    def star_from(bucket_keys: DataFrame) -> DataFrame:
-        """ONE definition of the star-edge rule (root = min doc per bucket)
-        so star mode and the all_pairs oversized-bucket fallback can never
-        silently diverge on e.g. the root tie-break."""
-        return (
-            bands.join(bucket_keys, ["band_idx", "band_hash"])
-            .where(F.col("doc_id") != F.col("root"))
-            .select(F.col("root").alias("src"), F.col("doc_id").alias("dst"))
-            .distinct()
-        )
-
-    if cfg.pair_mode == "star":
-        return star_from(multi), stats
-
-    # all_pairs mode: full enumeration for buckets <= cap via self-join;
-    # oversized buckets fall back to star edges (counted above).
-    small = multi.where(F.col("bucket_size") <= cfg.bucket_cap)
-    b_small = bands.join(small.select("band_idx", "band_hash"), ["band_idx", "band_hash"])
-    left = b_small.select("band_idx", "band_hash", F.col("doc_id").alias("src"))
-    right = b_small.select("band_idx", "band_hash", F.col("doc_id").alias("dst"))
-    all_pairs = (
-        left.join(right, ["band_idx", "band_hash"])
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
+    edges = (
+        bands.join(buckets.where(F.col("bucket_size") >= 2), ["band_idx", "band_hash"])
+        .where(F.col("doc_id") != F.col("root"))
+        .select(F.col("root").alias("src"), F.col("doc_id").alias("dst"))
         .distinct()
     )
-    big_star = star_from(multi.where(F.col("bucket_size") > cfg.bucket_cap))
-    return all_pairs.union(big_star).distinct(), stats
+    return edges, stats

@@ -35,12 +35,16 @@ from pyspark.sql.window import Window
 
 from deduplication_challenge_spark.config import DedupConfig
 
+# structural, not tunable: functions/hashing.simhash64, the oracle's
+# hamming_chunks and the hot-group salt shift all assume 64 bits
+SIMHASH_BITS = 64
+
 
 def simhash_chunk_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """signatures -> (doc_id, simhash, chunk_idx, chunk_val); empty docs
     excluded (mirrors /root/reference/src/main.py:85-89)."""
     n_chunks = cfg.hamming_k + 1
-    width = cfg.simhash_bits // n_chunks
+    width = SIMHASH_BITS // n_chunks
     mask = (1 << width) - 1
     chunks = F.array(
         *[
@@ -90,7 +94,7 @@ def _salted_chunks(chunks: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, Data
     flipped = F.col("simhash").bitwiseXOR(F.lit(_SIGN_BIT))
     salt = F.when(
         F.col("_hot").isNotNull(),
-        F.shiftrightunsigned(flipped, 64 - cfg.simhash_split_bits),
+        F.shiftrightunsigned(flipped, SIMHASH_BITS - cfg.simhash_split_bits),
     ).otherwise(F.lit(0))
     salted = (
         chunks.join(F.broadcast(hot), ["chunk_idx", "chunk_val"], "left")

@@ -1,32 +1,36 @@
-"""Suffix-array pass for exact substring duplicates.
+"""Exact-substring duplicate pass: a global winnowed-anchor equi-join.
 
 Semantics: emit doc pairs that share a verbatim substring of at least
 ``substr_min_len`` characters (the north_star's "suffix-array pass for exact
-substring duplicates"). A global suffix array over 100 TB is impractical in
-pure PySpark, so this is a **partition-local** pass (SURVEY.md §7.4.5): docs
-are hash-repartitioned, each partition builds one suffix array over its
-concatenated text via ``mapInPandas``, and pairs are found within the
-partition. Exact-duplicate and containment pairs planted in one partition
-are always found by the suffix-array kernel and, for shared runs of at
-least ``min_len + winnow_window - 1`` chars (the winnowing detection
-floor — 111 at the shipped defaults), by the rolling kernel;
-cross-partition substring pairs are the documented approximation (they
-are still caught by the MinHash/SimHash paths when similarity is high).
-Tests force co-location via ``num_partitions=1``.
+substring duplicates"). A suffix array over 100 TB is impractical in pure
+PySpark, and a partition-local one would make the output depend on which
+docs happen to be co-located. The pass therefore turns each doc into rows
+of content-defined anchors and joins them globally:
 
-Algorithm per partition (all numpy, no per-char Python):
-  1. concat texts with an out-of-alphabet separator, encode utf-32-le ->
-     uint32 code array;
-  2. suffix array by prefix doubling (O(n log n) lexsorts);
-  3. instead of Kasai LCP (a Python-speed per-char loop), note that "shares
-     a substring of length >= L" is equivalent to "some suffixes agree on
-     their first L codes", and first-L-codes equality is an *equivalence*:
-     equal-prefix suffixes are contiguous in SA order. So mark adjacent SA
-     entries whose L-length windows are equal (chunked vectorized compare),
-     group runs, and emit star edges (min doc_id -> member) per run — linear
-     output even for pathological boilerplate, mirroring operators/lsh.py.
-  4. suffixes within L of their doc's end are excluded up front, so windows
-     never cross doc boundaries and padding can't fabricate matches.
+  1. ``anchor_table``: per doc (``mapInPandas``, all numpy), a 64-bit
+     polynomial rolling hash of every ``min_len``-char window, thinned by
+     winnowing (Schleimer et al., SIGMOD 2003) to the rightmost minimum of
+     every ``substr_winnow_window`` consecutive hashes. The hash is
+     position-independent and the selection reads only the doc's own text,
+     so two docs sharing a run select identical anchor values in it, in
+     any partition or batch.
+  2. ``substring_pairs_from_anchors``: one equi-join on the anchor value
+     (plus the window text when ``substr_verify``), emitting star edges
+     per anchor group (min doc_id -> member) — linear even for a
+     boilerplate anchor shared by millions of docs, like operators/lsh.py.
+
+Detection is guaranteed for shared runs of at least
+``min_len + winnow_window - 1`` chars (111 at the shipped defaults); the
+output is independent of partition layout by construction. The pipeline
+persists the anchor table as the substring index that plans/incremental.py
+joins new batches against.
+
+Two numpy kernels over a whole doc list stay as references: the
+rolling-hash kernel (``substring_pairs_partition_rolling``, the oracle's
+substring pass, same hash and winnowing as the anchors) and the
+suffix-array kernel (``substring_pairs_partition``: prefix-doubling suffix
+array, adjacent L-window equality, star edges per equal-window run), which
+pins the rolling kernel at ``winnow_window=0`` in tests.
 """
 
 from __future__ import annotations
@@ -40,7 +44,6 @@ from pyspark.sql import functions as F
 
 from deduplication_challenge_spark.config import DedupConfig
 
-PAIR_SCHEMA = "src long, dst long"
 _SEP = "\x00"
 
 
@@ -107,8 +110,8 @@ def _prepare(doc_ids: np.ndarray, texts: list[str], min_len: int):
 def substring_pairs_partition(
     doc_ids: np.ndarray, texts: list[str], min_len: int
 ) -> pd.DataFrame:
-    """Suffix-array kernel (reference implementation; the pytest oracle uses
-    this, giving an independent differential check of the rolling-hash path)."""
+    """Suffix-array kernel: the independent reference the rolling-hash
+    kernel is differentially tested against (tests/test_suffixarray.py)."""
     if len(texts) < 2:
         return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
     codes, starts, ends = _prepare(doc_ids, texts, min_len)
@@ -155,14 +158,12 @@ def _uint64_inverse(b: np.uint64) -> np.uint64:
 _ROLL_B_INV = _uint64_inverse(_ROLL_B)
 
 
-def _winnow_positions(
-    pos: np.ndarray, h: np.ndarray, owner: np.ndarray, window: int
-) -> np.ndarray:
+def _winnow_positions(h: np.ndarray, owner: np.ndarray, window: int) -> np.ndarray:
     """Content-defined anchor selection (winnowing, Schleimer et al. SIGMOD
     2003), PER DOC: in every sliding window of `window` consecutive
     position-hashes keep the rightmost minimum. Selection depends only on
     the doc's own content, so two docs sharing a long run select the same
-    anchors inside it. Returns indices into pos/h."""
+    anchors inside it. Returns indices into h."""
     keep_idx: list[np.ndarray] = []
     bounds = np.flatnonzero(np.diff(owner)) + 1
     start = 0
@@ -185,39 +186,25 @@ def _winnow_positions(
     return np.concatenate(keep_idx) if keep_idx else np.empty(0, dtype=np.int64)
 
 
-def substring_pairs_partition_rolling(
-    doc_ids: np.ndarray,
-    texts: list[str],
+def _window_hashes(
+    codes: np.ndarray,
+    starts: np.ndarray,
+    ends: np.ndarray,
     min_len: int,
-    verify: bool = False,
-    winnow_window: int = 0,
-) -> pd.DataFrame:
-    """Rolling-hash kernel — the default scale path.
-
-    Identical semantics to the suffix-array kernel: both group suffixes by
-    equality of their first ``min_len`` chars (a window of L chars at offset
-    i IS suffix i truncated at L). Since the pass only needs equal-window
-    suffixes to be CONTIGUOUS — never true lexicographic order — a 64-bit
-    polynomial rolling hash per window plus ONE sort replaces ~7 prefix-
-    doubling lexsorts; memory traffic drops ~5x, which matters because the
-    kernel is bandwidth-bound under 32 concurrent executor tasks. Hash
-    collisions are eliminated exactly by the same adjacent window-equality
-    verification the SA path uses.
+    winnow_window: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(pos, h, owner) of every min_len-char window that fits inside its doc,
+    winnowed when ``winnow_window > 1``: start offsets into ``codes``, their
+    64-bit rolling hashes, and the index of the owning doc.
 
     Rolling hash in O(n), fully vectorized with uint64 wraparound arithmetic:
-    prefix[i] = sum_{j<i} c[j] * B^j;  H(i, L) = (prefix[i+L] - prefix[i]) * B^-i.
-    """
-    if len(texts) < 2:
-        return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
-    codes, starts, ends = _prepare(doc_ids, texts, min_len)
+    prefix[i] = sum_{j<i} (c[j]+1) * B^j;  H(i, L) = (prefix[i+L] - prefix[i]) * B^-i,
+    so H depends only on the window's chars, never on its position."""
     n = codes.size
-
-    # candidate positions: >= min_len real chars remaining in their doc
     owner_all = np.searchsorted(starts, np.arange(n), side="right") - 1
     pos = np.nonzero((ends[owner_all] - np.arange(n)) >= min_len)[0]
-    if pos.size < 2:
-        return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
-
+    if pos.size == 0:
+        return pos, np.empty(0, dtype=np.uint64), pos
     with np.errstate(over="ignore"):
         powers = np.empty(n + 1, dtype=np.uint64)
         powers[0] = 1
@@ -228,16 +215,40 @@ def substring_pairs_partition_rolling(
         prefix = np.zeros(n + 1, dtype=np.uint64)
         np.cumsum((codes.astype(np.uint64) + np.uint64(1)) * powers[:n], out=prefix[1:])
         h = (prefix[pos + min_len] - prefix[pos]) * inv_powers[pos]
-
+    owner = np.searchsorted(starts, pos, side="right") - 1
     if winnow_window > 1:
         # anchor sampling: ~2/(W+1) of positions survive; any run shared
-        # verbatim for >= min_len + W - 1 chars selects >= 1 common anchor,
-        # and every emitted pair still shares the full min_len-char anchor
-        owner_pos = np.searchsorted(starts, pos, side="right") - 1
-        sel = _winnow_positions(pos, h, owner_pos, winnow_window)
-        pos, h = pos[sel], h[sel]
-        if pos.size < 2:
-            return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
+        # verbatim for >= min_len + W - 1 chars selects >= 1 common anchor
+        sel = _winnow_positions(h, owner, winnow_window)
+        pos, h, owner = pos[sel], h[sel], owner[sel]
+    return pos, h, owner
+
+
+def substring_pairs_partition_rolling(
+    doc_ids: np.ndarray,
+    texts: list[str],
+    min_len: int,
+    verify: bool = False,
+    winnow_window: int = 0,
+) -> pd.DataFrame:
+    """Rolling-hash kernel over one doc list — the oracle's substring pass.
+
+    Identical semantics to the suffix-array kernel: both group suffixes by
+    equality of their first ``min_len`` chars (a window of L chars at offset
+    i IS suffix i truncated at L). Since the pass only needs equal-window
+    suffixes to be CONTIGUOUS — never true lexicographic order — a 64-bit
+    polynomial rolling hash per window plus ONE sort replaces ~7 prefix-
+    doubling lexsorts, cutting memory traffic ~5x. With ``verify``, hash
+    collisions are eliminated exactly by the same adjacent window-equality
+    check the SA path uses. With winnowing, every emitted pair still shares
+    the full min_len-char anchor.
+    """
+    if len(texts) < 2:
+        return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
+    codes, starts, ends = _prepare(doc_ids, texts, min_len)
+    pos, h, _ = _window_hashes(codes, starts, ends, min_len, winnow_window)
+    if pos.size < 2:
+        return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
 
     # hashtable prefilter: a window whose hash occurs once can't be in any
     # run — drop it before the sort (O(n) pandas hashtable, no ordering).
@@ -292,39 +303,14 @@ def _doc_anchor_frame(
     min_len-char window text under each anchor, so the join key becomes
     (anchor, win) — exact char-level verification through the shuffle at
     ~min_len bytes extra per anchor."""
-    if not texts:
-        cols = {"doc_id": pd.Series([], dtype="int64"), "anchor": pd.Series([], dtype="int64")}
-        if with_window:
-            cols["win"] = pd.Series([], dtype="object")
-        return pd.DataFrame(cols)
     codes, starts, ends = _prepare(doc_ids, texts, min_len)
-    n = codes.size
-    owner_all = np.searchsorted(starts, np.arange(n), side="right") - 1
-    pos = np.nonzero((ends[owner_all] - np.arange(n)) >= min_len)[0]
-    if pos.size == 0:
-        cols = {"doc_id": pd.Series([], dtype="int64"), "anchor": pd.Series([], dtype="int64")}
-        if with_window:
-            cols["win"] = pd.Series([], dtype="object")
-        return pd.DataFrame(cols)
-    with np.errstate(over="ignore"):
-        powers = np.empty(n + 1, dtype=np.uint64)
-        powers[0] = 1
-        np.cumprod(np.full(n, _ROLL_B, dtype=np.uint64), out=powers[1:])
-        inv_powers = np.empty(n, dtype=np.uint64)
-        inv_powers[0] = 1
-        np.cumprod(np.full(n - 1, _ROLL_B_INV, dtype=np.uint64), out=inv_powers[1:])
-        prefix = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum((codes.astype(np.uint64) + np.uint64(1)) * powers[:n], out=prefix[1:])
-        h = (prefix[pos + min_len] - prefix[pos]) * inv_powers[pos]
-    owner_pos = np.searchsorted(starts, pos, side="right") - 1
-    if winnow_window > 1:
-        sel = _winnow_positions(pos, h, owner_pos, winnow_window)
-        pos, h, owner_pos = pos[sel], h[sel], owner_pos[sel]
-    cols = {"doc_id": doc_ids[owner_pos], "anchor": h.view(np.int64)}
+    pos, h, owner = _window_hashes(codes, starts, ends, min_len, winnow_window)
+    cols = {"doc_id": doc_ids[owner], "anchor": h.view(np.int64)}
     if with_window:
-        cols["win"] = [
-            codes[p : p + min_len].tobytes().decode("utf-32-le") for p in pos
-        ]
+        cols["win"] = pd.Series(
+            [codes[p : p + min_len].tobytes().decode("utf-32-le") for p in pos],
+            dtype="object",
+        )
     return pd.DataFrame(cols).drop_duplicates()
 
 
@@ -385,9 +371,9 @@ def substring_pairs_global(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     of docs can never go quadratic (same shape as operators/lsh.py).
     Pairing is by 64-bit hash equality (collision odds ~2^-64 per anchor);
     with cfg.substr_verify=True the min_len-char window text rides along
-    and the join key becomes (anchor, win) — exact char-level verification,
-    honored in BOTH scopes (the Python oracle honors the same flag), at
-    ~min_len extra chars per shuffled anchor.
+    and the join key becomes (anchor, win) — exact char-level verification
+    (the Python oracle honors the same flag), at ~min_len extra chars per
+    shuffled anchor.
 
     Scale note: the anchor shuffle is ~2/(winnow_window+1) x corpus
     positions x 16 bytes (+~min_len chars when substr_verify);
@@ -397,49 +383,8 @@ def substring_pairs_global(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     # lazy checkpoint: anchors feeds BOTH the mins aggregate and the join
     # probe side — without it the corpus is re-hashed and re-winnowed twice
     # (two MapInPandas nodes in the executed plan), doubling the dominant
-    # cost of the default-scope substring pass
+    # cost of the substring pass
     from deduplication_challenge_spark.plans.checkpointing import stage_checkpoint
 
     anchors = stage_checkpoint(anchor_table(docs, cfg), cfg)
     return substring_pairs_from_anchors(anchors, cfg)
-
-
-def substring_pairs(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    num_partitions: int | None = None,
-    impl: str = "rolling",
-) -> DataFrame:
-    """docs(doc_id, text) -> star edges of substring-duplicate runs.
-
-    impl='rolling' (default, bandwidth-lean) or 'suffix_array' (reference).
-    The kernels produce identical pairs at winnow_window=0, where tests
-    assert equivalence; at the shipped window the rolling kernel samples
-    anchors (detection floor min_len + W - 1 shared chars) while the
-    suffix-array kernel ignores winnowing — same floor caveat as the
-    module docstring."""
-    min_len = cfg.substr_min_len
-    parts = num_partitions or cfg.substr_partitions
-    kernel = (
-        substring_pairs_partition_rolling if impl == "rolling" else substring_pairs_partition
-    )
-    # docs shorter than min_len can never participate — filter BEFORE the
-    # repartition shuffle so their text never moves
-    sel = docs.select("doc_id", "text").where(F.length("text") >= min_len)
-    if parts:
-        sel = sel.repartition(parts, "doc_id")
-
-    verify, winnow = cfg.substr_verify, cfg.substr_winnow_window
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        args = (pdf["doc_id"].to_numpy(), pdf["text"].fillna("").tolist(), min_len)
-        if kernel is substring_pairs_partition_rolling:
-            yield kernel(*args, verify, winnow)
-        else:
-            yield kernel(*args)
-
-    return sel.mapInPandas(gen, schema=PAIR_SCHEMA).distinct()

@@ -1,13 +1,15 @@
 """Jaccard verification of LSH candidate pairs.
 
 Pairs join back to their MinHash signatures and the estimated Jaccard
-(fraction of agreeing signature positions) is computed ENTIRELY JVM-side:
-``zip_with`` + ``aggregate`` higher-order functions inside whole-stage
-codegen. An earlier revision used an Arrow pandas UDF; shipping two
-128-element arrays per pair across the Python boundary made this stage
-bandwidth-bound — the native expression removes the round trip entirely
-(north_star: "verified with vectorized Jaccard estimation"; the
-vectorization now happens in Tungsten rather than numpy).
+(fraction of agreeing signature positions) is computed ENTIRELY JVM-side
+with the ``zip_with`` + ``aggregate`` higher-order functions. These are
+``CodegenFallback`` expressions in Spark 4.1.2: the surrounding join and
+filter are whole-stage codegen, but each pair's 2 x num_perm lambda calls
+run through the expression interpreter, so this per-element work is
+sensitive to the JVM's JIT. An earlier revision used an Arrow pandas UDF;
+shipping two 128-element arrays per pair across the Python boundary made
+this stage bandwidth-bound — the native expression removes that round trip
+(north_star: "verified with vectorized Jaccard estimation").
 """
 
 from __future__ import annotations
@@ -20,7 +22,8 @@ from deduplication_challenge_spark.config import DedupConfig
 
 def estimate_jaccard_col(sig_a: Column, sig_b: Column, num_perm: int) -> Column:
     """Fraction of agreeing positions of two equal-length signature arrays —
-    pure Spark expression (codegen), no UDF."""
+    a pure Spark expression, no UDF.  ``zip_with`` and ``aggregate`` are
+    ``CodegenFallback`` (interpreted per element), not whole-stage codegen."""
     agree = F.aggregate(
         F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
@@ -36,8 +39,8 @@ def verify_pairs(
 
     Two hash joins against the signatures table projected to
     (doc_id, minhash) — only the signature column shuffles, and the Jaccard
-    filter runs inside the join's codegen stage so rejected pairs never
-    materialize downstream.
+    filter runs in the join's stage (its higher-order functions interpreted)
+    so rejected pairs never materialize downstream.
     """
     # Shuffle-payload compression (guide §2.3 "shuffle fewer bytes —
     # narrower types"): minhash values live in [0, p] with p <= 2^31 - 1 =

@@ -6,7 +6,7 @@ substring pass, connected components (union-find), consolidation — in plain
 Python/pandas on the driver, reusing the exact same kernels the Spark
 operators use (functions/textnorm.py, functions/hashing.py,
 operators/consolidate.consolidate_cluster_pdf,
-operators/suffixarray.substring_pairs_partition).
+operators/suffixarray.substring_pairs_partition_rolling).
 
 Because edge-generation rules are pinned identically on both sides (star
 edges per LSH bucket, Hamming <= k via pigeonhole, same thresholds), the
@@ -269,8 +269,8 @@ def run_oracle(
                     d1, d2 = members[i][1], members[j][1]
                     res.simhash_edges.add((min(d1, d2), max(d1, d2)))
 
-    # substring pass: GLOBAL here (tests force Spark co-location to match);
-    # same pinned kernel + winnow/verify knobs as operators/suffixarray.py
+    # substring pass: the rolling kernel over the whole corpus — the same
+    # hash, winnowing and verify knob as the engine's global anchor join
     if include_substring:
         sub = substring_pairs_partition_rolling(
             docs["doc_id"].to_numpy(),

@@ -19,8 +19,8 @@ Pinned contract:
   * detection scope: MinHash-LSH bands + Jaccard verification, new-vs-new
     SimHash, AND — when the index carries the pipeline's persisted
     ``anchors`` table — the substring pass as a delta anchor equi-join
-    (cross and new-new).  An index built without the global-scope substring
-    pass runs without it, documented in ``report['scope']``, never silent;
+    (cross and new-new).  An index built with ``include_substring=False``
+    runs without it, documented in ``report['scope']``, never silent;
   * ``compact()`` = the periodic full recluster: reruns the complete
     pipeline over the extended index in place, resolves recorded bridges,
     emits an old->new cluster-id map, and leaves the workdir a valid
@@ -127,7 +127,7 @@ def substring_cross_candidates(
 ) -> DataFrame:
     """Delta substring pass: new-batch winnowed anchors equi-joined against
     the index's persisted anchor table ({workdir}/anchors, written by
-    the pipeline's candidates stage for the global-scope substring pass).
+    the pipeline's candidates stage when ``include_substring=True``).
     Anchors are position- and batch-independent functions of each doc's own
     content (operators/suffixarray.anchor_table), so a verbatim run shared
     across batches yields identical anchor values — the cross pass is a
@@ -346,8 +346,8 @@ class IncrementalDedup:
 
     def _has_anchor_index(self) -> bool:
         """True when the index carries the persisted substring-anchor table
-        ({workdir}/anchors — global-scope substring runs persist it as a
-        candidates-stage side output)."""
+        ({workdir}/anchors — runs with ``include_substring=True`` persist it
+        as a candidates-stage side output)."""
         return fs_exists(self.spark, _j(self.workdir, "anchors"))
 
     def run(self, new_pages: DataFrame, recompute_text: bool = True):
@@ -419,7 +419,7 @@ class IncrementalDedup:
         cross_parts = [cross_lsh, cross_sim]
 
         # substring delta: when the index carries the pipeline's persisted
-        # anchor table ({workdir}/anchors, global-scope substring pass), the
+        # anchor table ({workdir}/anchors, include_substring=True), the
         # new batch's anchors equi-join against it — the biggest former
         # scope cut of the incremental path.  Substring pairs are exact by
         # construction (same rule as the batch pipeline): no Jaccard verify.
@@ -544,7 +544,7 @@ class IncrementalDedup:
                 if substr_active
                 else "minhash-lsh+verify cross; lsh+simhash new-new; "
                 "substring pass OFF (index has no anchors table — build the "
-                "index with the global-scope substring pass, or compact())"
+                "index with include_substring=True, or compact())"
             ),
         }
         self._last = (docs_new, sigs_new, assignments_new)

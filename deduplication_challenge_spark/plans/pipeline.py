@@ -38,6 +38,7 @@ from deduplication_challenge_spark.plans.checkpointing import (
     fs_mkdirs,
     fs_read_text,
     fs_write_text,
+    stage_checkpoint,
 )
 from deduplication_challenge_spark.operators import lsh, simhash, suffixarray, verify
 from deduplication_challenge_spark.operators.connected_components import connected_components
@@ -51,12 +52,12 @@ STAGES = [
 ]
 # 'urldedup' runs only when cfg.url_dedup is True and 'linededup' only when
 # cfg.line_dedup_min_docs is set; all other stages are unconditional.  The
-# global-scope substring pass additionally persists its winnowed anchor
-# table to {workdir}/anchors as a SIDE OUTPUT of the candidates stage (the
-# substring index the incremental delta pass joins new batches against) —
-# written inside the stage from the same checkpointed frame the pair
-# derivation consumes, so persistence costs one parquet write, not a stage
-# boundary + read-back
+# substring pass (include_substring=True) additionally persists its
+# winnowed anchor table to {workdir}/anchors as a SIDE OUTPUT of the
+# candidates stage (the substring index the incremental delta pass joins
+# new batches against) — written inside the stage from the same
+# checkpointed frame the pair derivation consumes, so persistence costs one
+# parquet write, not a stage boundary + read-back
 
 
 @dataclass
@@ -102,14 +103,12 @@ class DedupPipeline:
         cfg: DedupConfig,
         workdir: str,
         include_substring: bool = True,
-        substring_partitions: int | None = None,
         recompute_text: bool = True,
     ) -> None:
         self.spark = spark
         self.cfg = cfg
         self.workdir = workdir
         self.include_substring = include_substring
-        self.substring_partitions = substring_partitions
         # False = trust the shipped text column (pure column pruning — the
         # scan never reads html; the scale-correct plan when extraction
         # already happened upstream). True exercises the byte-identical
@@ -339,11 +338,6 @@ class DedupPipeline:
             lambda df, rows: {"signatures_emitted": rows},
         )
 
-        use_global_substr = (
-            self.include_substring
-            and self.substring_partitions is None
-            and cfg.substr_scope == "global"
-        )
         anchors_path = self._stage_dir("anchors")
 
         # stats frames built alongside the edges (sharing the checkpointed
@@ -371,34 +365,22 @@ class DedupPipeline:
             sim_tagged = sim_edges.select("src", "dst", F.lit("simhash").alias("origin"))
             parts = [lsh_tagged, sim_tagged]
             if self.include_substring:
-                # explicit substring_partitions forces the partition-local
-                # kernels (tests pin co-location to compare against local
-                # goldens); otherwise cfg.substr_scope picks the pass
-                if use_global_substr:
-                    # the winnowed anchor table is PERSISTED as a side
-                    # output ({workdir}/anchors) — it is the substring index
-                    # the incremental delta pass equi-joins new batches
-                    # against.  It is written from the same checkpointed
-                    # frame the pair derivation reads, INSIDE this stage:
-                    # one kernel run, one parquet write, and the two pair
-                    # consumers (mins aggregate, probe join) serve from the
-                    # checkpoint — a separate anchors stage measured +12-18s
-                    # at 1M/local[8] (stage boundary + double parquet
-                    # read-back) and cost the N->4N efficiency ~0.05
-                    from deduplication_challenge_spark.plans.checkpointing import (
-                        stage_checkpoint,
-                    )
-
-                    anchors = stage_checkpoint(
-                        suffixarray.anchor_table(docs, cfg), cfg
-                    )
-                    anchors.write.mode("overwrite").parquet(anchors_path)
-                    sub = suffixarray.substring_pairs_from_anchors(anchors, cfg)
-                else:
-                    sub = suffixarray.substring_pairs(docs, cfg, self.substring_partitions)
+                # the winnowed anchor table is PERSISTED as a side output
+                # ({workdir}/anchors) — it is the substring index the
+                # incremental delta pass equi-joins new batches against.  It
+                # is written from the same checkpointed frame the pair
+                # derivation reads, INSIDE this stage: one kernel run, one
+                # parquet write, and the two pair consumers (mins aggregate,
+                # probe join) serve from the checkpoint — a separate anchors
+                # stage measured +12-18s at 1M/local[8] (stage boundary +
+                # double parquet read-back) and cost the N->4N efficiency
+                # ~0.05
+                anchors = stage_checkpoint(suffixarray.anchor_table(docs, cfg), cfg)
+                anchors.write.mode("overwrite").parquet(anchors_path)
+                sub = suffixarray.substring_pairs_from_anchors(anchors, cfg)
                 parts.append(sub.select("src", "dst", F.lit("substring").alias("origin")))
-            if not use_global_substr and fs_exists(self.spark, anchors_path):
-                # a previous run under a different config left an anchor
+            elif fs_exists(self.spark, anchors_path):
+                # a previous run with the substring pass left an anchor
                 # table; it no longer matches this run's candidates — remove
                 # it so the incremental path can never join stale anchors
                 fs_delete(self.spark, anchors_path)
@@ -412,10 +394,10 @@ class DedupPipeline:
                 f"pairs_{r['origin']}": r["n"]
                 for r in df.groupBy("origin").agg(F.count("*").alias("n")).collect()
             }
-            # no-silent-caps contract: bucket-cap degradations (all_pairs
-            # mode) and simhash hot-group splits are pinned SEMANTIC events
-            # and must reach the manifest, not just the modules' return
-            # values.  The frames were built in build_candidates over the
+            # no-silent-caps contract: simhash hot-group splits are pinned
+            # SEMANTIC events and must reach the manifest (with the LSH
+            # bucket counts), not just the modules' return values.  The
+            # frames were built in build_candidates over the
             # SAME checkpointed band/chunk tables the edges consumed —
             # collecting them here runs two small aggregates over already-
             # materialized data, off the stage's write path, with no table
@@ -428,14 +410,14 @@ class DedupPipeline:
                 **{f"lsh_{k}": int(v or 0) for k, v in ls.items()},
                 **{f"simhash_{k}": int(v or 0) for k, v in ss.items()},
             }
-            if use_global_substr:
+            if self.include_substring:
                 # parquet-metadata count of the persisted substring index
                 out["anchors_emitted"] = self.spark.read.parquet(anchors_path).count()
             return out
 
         candidates, fp = self._run_stage(
             report, "candidates", fp,
-            f"substring={self.include_substring}:{self.substring_partitions}",
+            f"substring={self.include_substring}",
             build_candidates,
             candidate_counters,
         )

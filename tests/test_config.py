@@ -11,16 +11,6 @@ def test_bands_rows_must_multiply_to_num_perm():
         DedupConfig(bands=3, rows=5, num_perm=128)
 
 
-def test_pair_mode_validated():
-    with pytest.raises(ValueError):
-        DedupConfig(pair_mode="clique")
-
-
-def test_substr_scope_validated():
-    with pytest.raises(ValueError):
-        DedupConfig(substr_scope="cluster")
-
-
 @pytest.mark.parametrize("bits", [0, -1, 64, 65])
 def test_simhash_split_bits_range(bits):
     """JVM shifts are mod-64: split_bits=0 would make the salt a full-hash
@@ -86,3 +76,10 @@ def test_minhash_prime_bounded_by_int32():
     with pytest.raises(ValueError, match="minhash_prime"):
         DedupConfig(minhash_prime=2**31 + 11)
     assert DedupConfig(minhash_prime=2**31 - 1).minhash_prime == 2**31 - 1
+
+
+def test_hamming_chunks_must_divide_simhash():
+    """The 64-bit simhash splits into hamming_k+1 equal pigeonhole chunks."""
+    assert DedupConfig(hamming_k=7).hamming_k == 7
+    with pytest.raises(ValueError, match="hamming_k"):
+        DedupConfig(hamming_k=4)

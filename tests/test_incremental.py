@@ -222,8 +222,8 @@ class TestChainedBatches:
 
 
 class TestSubstringDelta:
-    """The incremental substring pass: index built WITH the global-scope
-    substring stage persists its anchor table; delta batches equi-join
+    """The incremental substring pass: an index built WITH the substring
+    pass persists its anchor table; delta batches equi-join
     against it — planted CROSS-BATCH substring dups must attach."""
 
     @pytest.fixture(scope="class")
@@ -257,7 +257,7 @@ class TestSubstringDelta:
         mk = lambda u, t: (u, dt.datetime(2025, 1, 1), None, t, "en")
         idx_pages = spark.createDataFrame([mk("https://s/a", text_a)], PAGES_DDL)
         wd = str(tmp_path_factory.mktemp("substr_idx"))
-        # default include_substring=True + global scope -> anchors table
+        # default include_substring=True -> anchors table
         DedupPipeline(spark, cfg, wd).run(idx_pages, "idx")
         import os
 

@@ -1,76 +1,8 @@
-"""Multimodal tests: schema, Arrow batch shape, deterministic feature
-contract, and REAL image/audio decode through the vendored PNG/BMP/WAV
-codecs (undecodable payloads featurize over opaque bytes)."""
+"""Unit tests for the vendored binary codecs: byte-exact PNG/BMP, WAV and
+AVI roundtrips and spec-level rejects."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
-
-from deduplication_challenge_spark.operators.multimodal import (
-    ASSET_SCHEMA,
-    decode_and_featurize,
-    frame_sample_plan,
-)
-
-
-@pytest.fixture(scope="module")
-def assets(spark):
-    rows = [
-        (1, "image", bytes(range(256)) * 4, ("png", 16, 16, None)),
-        (2, "image", b"\x00" * 1024, ("png", 32, 32, None)),
-        (3, "image", None, ("png", None, None, None)),
-        (4, "audio", b"\x01\x02\x03\x04" * 100, ("wav", None, None, 2000)),
-        (5, "video", b"\xff" * 2048, ("mp4", 640, 480, 3500)),
-        (6, "video", b"", ("mp4", 640, 480, 0)),
-    ]
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
-
-
-class TestDecodeFeaturize:
-    def test_schema_and_rowcount(self, spark, assets):
-        out = decode_and_featurize(assets)
-        rows = out.collect()
-        assert len(rows) == 6
-        assert out.columns == [
-            "asset_id", "kind", "ok", "decoded", "media_format", "width", "height",
-            "sample_rate", "n_frames", "n_bytes", "byte_entropy", "features",
-        ]
-
-    def test_feature_contract(self, spark, assets):
-        rows = {r["asset_id"]: r for r in decode_and_featurize(assets, feature_dim=16).collect()}
-        # fixed width, float32-valued, normalized histogram sums to ~1
-        for aid in (1, 2, 4, 5):
-            feats = rows[aid]["features"]
-            assert len(feats) == 16
-            assert abs(sum(feats) - 1.0) < 1e-5
-        # uniform byte stream -> max entropy 8 bits, constant stream -> 0
-        assert abs(rows[1]["byte_entropy"] - 8.0) < 1e-9
-        assert rows[2]["byte_entropy"] == 0.0
-
-    def test_null_payload_is_total(self, spark, assets):
-        rows = {r["asset_id"]: r for r in decode_and_featurize(assets).collect()}
-        assert rows[3]["ok"] is False
-        assert rows[3]["n_bytes"] == 0
-        assert len(rows[3]["features"]) == 16
-
-    def test_deterministic(self, spark, assets):
-        a = sorted(map(str, decode_and_featurize(assets).collect()))
-        b = sorted(map(str, decode_and_featurize(assets.repartition(5)).collect()))
-        assert a == b
-
-
-class TestFrameSamplePlan:
-    def test_expansion_math(self, spark, assets):
-        plan = frame_sample_plan(assets, every_ms=1000).collect()
-        by_asset = {}
-        for r in plan:
-            by_asset.setdefault(r["asset_id"], []).append(r["frame_ts_ms"])
-        # 3500ms @1000ms -> frames at 0,1000,2000,3000
-        assert sorted(by_asset[5]) == [0, 1000, 2000, 3000]
-        # duration 0 -> single frame at 0 (pinned degenerate behavior)
-        assert by_asset[6] == [0]
-        # non-video assets excluded
-        assert set(by_asset) == {5, 6}
 
 
 class TestImageCodecs:
@@ -132,48 +64,28 @@ class TestImageCodecs:
         assert probe_image(None) is None
 
 
-class TestRealImageDecode:
-    def test_png_assets_decode_to_pixels(self, spark):
-        """ok=true with real decoded pixel stats: a constant-color PNG has
-        entropy 0 over PIXELS even though its compressed bytes are high-
-        entropy — the discriminating check that decode is real."""
-        from deduplication_challenge_spark.functions.imagecodec import encode_png
+    def test_png_zlib_bomb_rejected(self):
+        """A tiny crafted PNG whose IDAT expands to ~100 MB is rejected by the
+        bounded decompressor, not materialized."""
+        import struct
+        import zlib
 
-        flat = np.full((8, 8, 3), 200, dtype=np.uint8)
-        png = encode_png(flat)
-        # compressed payload bytes are NOT constant
-        assert len(set(png)) > 10
-        rows = [(1, "image", png, ("png", 8, 8, None))]
-        df = spark.createDataFrame(rows, ASSET_SCHEMA)
-        out = decode_and_featurize(df).collect()[0]
-        assert out["ok"] and out["decoded"]
-        assert out["media_format"] == "png"
-        assert (out["width"], out["height"]) == (8, 8)
-        assert out["byte_entropy"] == 0.0  # constant pixels, not bytes
-        feats = np.array(out["features"])
-        assert feats[int(200 / 256 * 16)] == 1.0  # all mass in the 200-bin
+        from deduplication_challenge_spark.functions.imagecodec import decode_png
 
-    def test_bmp_asset_and_opaque_fallback(self, spark):
-        from deduplication_challenge_spark.functions.imagecodec import encode_bmp
+        def chunk(ctype, body):
+            return (struct.pack(">I", len(body)) + ctype + body
+                    + struct.pack(">I", zlib.crc32(ctype + body)))
 
-        rng = np.random.Generator(np.random.PCG64(5))
-        img = rng.integers(0, 256, size=(6, 6, 3), dtype=np.uint8)
-        rows = [
-            (1, "image", encode_bmp(img), ("bmp", 6, 6, None)),
-            (2, "audio", b"\x01\x02\x03\x04" * 64, ("wav", None, None, 1000)),
-        ]
-        df = spark.createDataFrame(rows, ASSET_SCHEMA)
-        out = {r["asset_id"]: r for r in decode_and_featurize(df).collect()}
-        assert out[1]["decoded"] and out[1]["media_format"] == "bmp"
-        assert (out[1]["width"], out[1]["height"]) == (6, 6)
-        # raw bytes mislabeled 'wav' are NOT valid RIFF -> opaque fallback
-        assert not out[2]["decoded"] and out[2]["media_format"] is None
-        assert out[2]["ok"]  # opaque bytes still featurized
+        ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)  # says 4x4 RGB
+        bomb = zlib.compress(b"\x00" * 100_000_000)  # ~100 KB on the wire
+        png = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+               + chunk(b"IDAT", bomb) + chunk(b"IEND", b""))
+        with pytest.raises(ValueError, match="scanline size mismatch"):
+            decode_png(png)
 
 
 class TestRealAudioDecode:
-    """Vendored WAV codec: sample-exact roundtrips, real decoded-sample
-    features through the multimodal path, spec-level rejects."""
+    """Vendored WAV codec: sample-exact roundtrips and spec-level rejects."""
 
     def _tone(self, n=4000, channels=1, freq=440.0, rate=16000):
         t = np.arange(n) / rate
@@ -218,34 +130,9 @@ class TestRealAudioDecode:
                + b"data" + struct.pack("<I", 0))
         assert probe_wav(bad) is None
 
-    def test_audio_assets_decode_to_samples(self, spark):
-        """decoded=true with real PCM stats: a constant-DC WAV has entropy 0
-        over SAMPLES even though the 16-bit container bytes alternate — the
-        discriminating check that audio decode is real (mirrors the PNG
-        pixel-entropy check)."""
-        from deduplication_challenge_spark.functions.audiocodec import encode_wav
-
-        dc = np.full((2000, 1), 12345, dtype=np.int16)  # constant sample
-        payload = encode_wav(dc, 16000)
-        rows = [
-            (1, "audio", payload, ("wav", None, None, 125)),
-            (2, "audio", encode_wav(self._tone(), 16000), ("wav", None, None, 250)),
-        ]
-        df = spark.createDataFrame(rows, ASSET_SCHEMA)
-        out = {r["asset_id"]: r for r in decode_and_featurize(df).collect()}
-        assert out[1]["decoded"] and out[1]["media_format"] == "wav"
-        assert out[1]["sample_rate"] == 16000 and out[1]["n_frames"] == 2000
-        assert out[1]["byte_entropy"] == 0.0  # constant samples, not bytes
-        # the sine tone spreads mass across bins and keeps frame metadata
-        assert out[2]["decoded"] and out[2]["n_frames"] == 4000
-        assert out[2]["byte_entropy"] > 1.0
-        feats = np.array(out[2]["features"])
-        assert abs(feats.sum() - 1.0) < 1e-5
-
 
 class TestRealVideoDecode:
-    """Vendored AVI codec: frame-exact roundtrips, real frame-sampled pixel
-    features through the multimodal path, spec-level rejects."""
+    """Vendored AVI codec: frame-exact roundtrips and spec-level rejects."""
 
     def _clip(self, n_frames=4, h=6, w=5, seed=11):
         rng = np.random.Generator(np.random.PCG64(seed))
@@ -289,100 +176,8 @@ class TestRealVideoDecode:
         with pytest.raises(ValueError):
             decode_avi(bytes(hacked))
 
-    def test_video_assets_decode_to_frame_samples(self, spark):
-        """decoded=true with real pixel stats: a constant-color clip has
-        entropy 0 over PIXELS even though container bytes vary (headers,
-        fourccs) — the discriminating check that video decode is real; and
-        a long clip reports the container's FULL frame count while only
-        VIDEO_SAMPLE_FRAMES frames feed the feature stream."""
-        from deduplication_challenge_spark.functions.videocodec import encode_avi
-        from deduplication_challenge_spark.operators.multimodal import (
-            VIDEO_SAMPLE_FRAMES,
-        )
-
-        flat = np.full((3, 4, 4, 3), 200, dtype=np.uint8)  # constant pixels
-        long_clip = self._clip(n_frames=VIDEO_SAMPLE_FRAMES * 3, h=4, w=4)
-        rows = [
-            (1, "video", encode_avi(flat), ("avi", 4, 4, 120)),
-            (2, "video", encode_avi(long_clip), ("avi", 4, 4, 960)),
-            (3, "video", b"\x09\x08\x07" * 50, ("mp4", None, None, 500)),
-        ]
-        df = spark.createDataFrame(rows, ASSET_SCHEMA)
-        out = {r["asset_id"]: r for r in decode_and_featurize(df).collect()}
-        assert out[1]["decoded"] and out[1]["media_format"] == "avi"
-        assert (out[1]["width"], out[1]["height"]) == (4, 4)
-        assert out[1]["n_frames"] == 3
-        assert out[1]["byte_entropy"] == 0.0  # constant pixels, not bytes
-        feats = np.array(out[1]["features"])
-        assert feats[int(200 / 256 * 16)] == 1.0  # all mass in the 200-bin
-        # long clip: full frame count reported, sampled stream featurized
-        assert out[2]["decoded"] and out[2]["n_frames"] == VIDEO_SAMPLE_FRAMES * 3
-        assert abs(np.array(out[2]["features"]).sum() - 1.0) < 1e-5
-        # compressed/unknown container -> opaque fallback, still featurized
-        assert not out[3]["decoded"] and out[3]["media_format"] is None
-        assert out[3]["ok"]
-
-
-class TestFormatRegistry:
-    def test_every_declared_codec_actually_decodes(self, spark):
-        """IMAGE_CODECS/AUDIO_CODECS/VIDEO_CODECS are the public capability
-        declaration — each listed format must really decode end-to-end."""
-        from deduplication_challenge_spark.functions.audiocodec import encode_wav
-        from deduplication_challenge_spark.functions.imagecodec import (
-            encode_bmp,
-            encode_png,
-        )
-        from deduplication_challenge_spark.functions.videocodec import encode_avi
-        from deduplication_challenge_spark.operators.multimodal import (
-            AUDIO_CODECS,
-            IMAGE_CODECS,
-            VIDEO_CODECS,
-            _decode_payload,
-        )
-
-        from deduplication_challenge_spark.functions.jpegcodec import encode_jpeg
-
-        rng = np.random.Generator(np.random.PCG64(2))
-        img = rng.integers(0, 256, size=(4, 4, 3), dtype=np.uint8)
-        samples = [
-            ("png", encode_png(img)),
-            ("bmp", encode_bmp(img)),
-            ("jpeg", encode_jpeg(img)),
-            ("wav", encode_wav(rng.integers(-99, 99, size=(50, 1)).astype(np.int16), 8000)),
-            ("avi", encode_avi(rng.integers(0, 256, size=(2, 4, 4, 3), dtype=np.uint8))),
-        ]
-        declared = set(IMAGE_CODECS) | set(AUDIO_CODECS) | set(VIDEO_CODECS)
-        assert declared == {fmt for fmt, _ in samples}
-        for fmt, payload in samples:
-            _, got_fmt, *_ = _decode_payload(payload)
-            assert got_fmt == fmt
-
 
 class TestHardeningRegressions:
-    def test_png_zlib_bomb_rejected_not_materialized(self):
-        """A tiny crafted PNG whose IDAT expands to ~100 MB must be rejected
-        by the bounded decompressor, not materialized (executor-OOM vector)."""
-        import struct
-        import zlib
-
-        from deduplication_challenge_spark.functions.imagecodec import decode_png
-
-        def chunk(ctype, body):
-            return (struct.pack(">I", len(body)) + ctype + body
-                    + struct.pack(">I", zlib.crc32(ctype + body)))
-
-        ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)  # says 4x4 RGB
-        bomb = zlib.compress(b"\x00" * 100_000_000)  # ~100 KB on the wire
-        png = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-               + chunk(b"IDAT", bomb) + chunk(b"IEND", b""))
-        with pytest.raises(ValueError, match="scanline size mismatch"):
-            decode_png(png)
-        # and through the decode path it degrades to opaque bytes
-        from deduplication_challenge_spark.operators.multimodal import _decode_payload
-
-        arr, fmt, *_ = _decode_payload(png)
-        assert fmt is None and arr.size == len(png)
-
     def test_wav_absurd_sample_rate_rejected(self):
         """rate >= 2^31 would wrap negative in the int32 sample_rate column
         (or abort the batch under numpy 2.x) — probe rejects it."""
@@ -395,13 +190,3 @@ class TestHardeningRegressions:
                 + b"fmt " + struct.pack("<I", 16) + fmt
                 + b"data" + struct.pack("<I", 4) + b"\x01\x02\x03\x04")
         assert probe_wav(data) is None
-
-    def test_feature_vector_counts_path_matches_histogram(self):
-        from deduplication_challenge_spark.operators.multimodal import _feature_vector
-
-        rng = np.random.Generator(np.random.PCG64(7))
-        arr = rng.integers(0, 256, size=5000, dtype=np.uint8)
-        counts = np.bincount(arr, minlength=256)
-        assert np.array_equal(
-            _feature_vector(arr, 16, counts), _feature_vector(arr, 16, None)
-        )

@@ -31,13 +31,10 @@ def midscale(request, spark, cfg, tmp_path_factory):
     corpus = generate_corpus(n_docs=n, seed=7 if n == 2000 else 11)
     oracle = run_oracle(corpus.rows, cfg, include_substring=True)
     pages, _ = corpus_to_spark(spark, corpus)
-    # 2k: partition-local substring kernel, forced co-location (exercises the
-    # local path against the global oracle). 10k: the default GLOBAL anchor
-    # pass — matches the oracle with no co-location requirement at all.
-    sub_parts = 1 if n == 2000 else None
+    # the shipped global anchor pass: matches the oracle's whole-corpus
+    # substring kernel with no co-location requirement at either size
     pipe = DedupPipeline(
-        spark, cfg, str(tmp_path_factory.mktemp("mid")),
-        include_substring=True, substring_partitions=sub_parts,
+        spark, cfg, str(tmp_path_factory.mktemp("mid")), include_substring=True
     )
     canonical, report = pipe.run(pages, input_desc=f"mid{n}")
     return corpus, oracle, canonical.collect(), report

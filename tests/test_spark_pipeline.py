@@ -33,7 +33,7 @@ def _pairs(assign: dict) -> set:
 def pipeline_run(spark, cfg, micro_corpus, tmp_path_factory):
     workdir = str(tmp_path_factory.mktemp("pipe"))
     pages, golden = corpus_to_spark(spark, micro_corpus)
-    pipe = DedupPipeline(spark, cfg, workdir, include_substring=True, substring_partitions=1)
+    pipe = DedupPipeline(spark, cfg, workdir, include_substring=True)
     canonical, report = pipe.run(pages, input_desc="micro60")
     return {
         "workdir": workdir,
@@ -130,9 +130,7 @@ class TestResume:
 
     def test_config_change_invalidates(self, pipeline_run, spark):
         cfg2 = DedupConfig(jaccard_threshold=0.9)
-        pipe2 = DedupPipeline(
-            spark, cfg2, pipeline_run["workdir"], include_substring=True, substring_partitions=1
-        )
+        pipe2 = DedupPipeline(spark, cfg2, pipeline_run["workdir"], include_substring=True)
         _, report2 = pipe2.run(pipeline_run["pages"], input_desc="micro60")
         assert not report2.stages["verify"].skipped
 
@@ -143,7 +141,7 @@ class TestResume:
         wd = pipeline_run["workdir"]
         # restore original-config manifests first (previous test overwrote them)
         pages, _ = corpus_to_spark(spark, micro_corpus)
-        pipe = DedupPipeline(spark, cfg, wd, include_substring=True, substring_partitions=1)
+        pipe = DedupPipeline(spark, cfg, wd, include_substring=True)
         pipe.run(pages, input_desc="micro60")
         os.remove(os.path.join(wd, "cc.manifest.json"))
         shutil.rmtree(os.path.join(wd, "cc"), ignore_errors=True)
@@ -183,7 +181,7 @@ class TestLineDedupStage:
         cfg = replace(DedupConfig(), line_dedup_min_docs=2)
         workdir = str(tmp_path_factory.mktemp("pipe_ld"))
         pages, _ = corpus_to_spark(spark, micro_corpus)
-        pipe = DedupPipeline(spark, cfg, workdir, include_substring=True, substring_partitions=1)
+        pipe = DedupPipeline(spark, cfg, workdir, include_substring=True)
         canonical, report = pipe.run(pages, input_desc="micro60-ld")
         return {"cfg": cfg, "pipe": pipe, "pages": pages,
                 "canonical": canonical.collect(), "report": report}
@@ -240,9 +238,7 @@ class TestLineDedupStage:
         )
         cfg = replace(DedupConfig(), line_dedup_min_docs=2)
         workdir = str(tmp_path_factory.mktemp("pipe_ld_dup"))
-        pipe = DedupPipeline(
-            spark, cfg, workdir, include_substring=False, substring_partitions=1
-        )
+        pipe = DedupPipeline(spark, cfg, workdir, include_substring=False)
         canonical, report = pipe.run(pages.unionByName(re_crawl), input_desc="dup-url")
         ld = report.stages["linededup"]
         assert ld.counters["docs_collapsed_dup_doc_id"] == 1
@@ -339,7 +335,7 @@ class TestUrlDedupStage:
         )
         wd = str(tmp_path_factory.mktemp("pipe_url"))
         canonical, report = DedupPipeline(
-            spark, cfg, wd, include_substring=True, substring_partitions=1
+            spark, cfg, wd, include_substring=True
         ).run(pages, input_desc="url-variants")
         # the 3 variants are gone before ingest
         assert report.counters["pages_after_url_dedup"] == len(micro_corpus.rows)
@@ -407,7 +403,7 @@ class TestManifestIntegrity:
         """lsh bucket stats and simhash hot-group stats must reach the
         manifest (the modules' no-silent-caps contract)."""
         counters = pipeline_run["report"].counters
-        assert "lsh_buckets" in counters and "lsh_capped_buckets" in counters
+        assert "lsh_buckets" in counters and "lsh_multi_buckets" in counters
         assert "simhash_hot_keys" in counters and "simhash_chunk_rows" in counters
 
 

@@ -1,4 +1,5 @@
-"""Suffix-array kernel unit tests (partition-local pass semantics)."""
+"""Substring pass tests: the numpy reference kernels (suffix array and
+rolling hash) and the global anchor pass the pipeline runs."""
 
 import numpy as np
 import pytest
@@ -151,13 +152,15 @@ class TestGlobalAnchorPass:
         }
 
     def test_equals_local_kernel_when_colocated(self, spark, cfg, corpus_df):
-        from deduplication_challenge_spark.operators.suffixarray import substring_pairs
-
+        """The global pass equals the numpy rolling kernel run over the
+        whole corpus at once (every doc co-located) — the oracle's kernel."""
         ids, texts, df = corpus_df
-        local = {
-            (r["src"], r["dst"])
-            for r in substring_pairs(df, cfg, num_partitions=1).collect()
-        }
+        ref = substring_pairs_partition_rolling(
+            np.array(ids, dtype=np.int64), texts, cfg.substr_min_len,
+            cfg.substr_verify, cfg.substr_winnow_window,
+        )
+        local = set(zip(ref["src"].tolist(), ref["dst"].tolist()))
+        assert local  # the planted pairs are found
         assert self._global(df, cfg) == local
 
     def test_partition_layout_independent(self, spark, cfg, corpus_df):
@@ -167,8 +170,8 @@ class TestGlobalAnchorPass:
             assert self._global(df, cfg, repartition=parts) == base, parts
 
     def test_cross_partition_pairs_found(self, spark, cfg, corpus_df):
-        """The local pass only finds co-located pairs; the global pass must
-        find every planted pair under ANY partitioning."""
+        """The global pass must find every planted pair under ANY
+        partitioning, not only pairs that share a partition."""
         ids, _, df = corpus_df
         planted = {(ids[i], ids[i + 1]) for i in range(0, 16, 2)}
         got = self._global(df, cfg, repartition=16)
@@ -177,8 +180,7 @@ class TestGlobalAnchorPass:
     def test_verify_honored_in_global_scope(self, spark, cfg, corpus_df):
         """cfg.substr_verify=True in the GLOBAL pass ships the min_len-char
         window and joins on (anchor, win) — exact char verification, same
-        pairs as the hash-only path on collision-free data (ADVICE r2: the
-        flag used to be silently ignored in global scope)."""
+        pairs as the hash-only path on collision-free data."""
         from dataclasses import replace
 
         ids, _, df = corpus_df

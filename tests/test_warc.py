@@ -73,13 +73,13 @@ class TestWarcPipelineEquivalence:
 
         wd1 = str(tmp_path_factory.mktemp("wd_warc"))
         can_warc, _ = DedupPipeline(
-            spark, DedupConfig(), wd1, include_substring=True, substring_partitions=1
+            spark, DedupConfig(), wd1, include_substring=True
         ).run(pages_warc, input_desc="warc")
 
         pages_df, _ = corpus_to_spark(spark, micro_corpus)
         wd2 = str(tmp_path_factory.mktemp("wd_df"))
         can_df, _ = DedupPipeline(
-            spark, DedupConfig(), wd2, include_substring=True, substring_partitions=1
+            spark, DedupConfig(), wd2, include_substring=True
         ).run(pages_df, input_desc="df")
 
         got = {tuple(sorted(r["member_urls"])) for r in can_warc.collect()}

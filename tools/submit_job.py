@@ -2,7 +2,7 @@
 
     spark-submit --py-files dist/dedup_engine.zip tools/submit_job.py \
         --input <pages parquet/table> --workdir <checkpoint dir> \
-        [--no-substring] [--substring-partitions N] [--output <path>]
+        [--no-substring] [--output <path>]
 
 On a cluster the master/executor topology comes from spark-submit; this
 script only declares the job. The SparkSession is fetched with
@@ -30,7 +30,6 @@ def main() -> None:
     ap.add_argument("--workdir", required=True, help="stage checkpoint dir")
     ap.add_argument("--output", default=None, help="optional extra canonical copy")
     ap.add_argument("--no-substring", action="store_true")
-    ap.add_argument("--substring-partitions", type=int, default=None)
     ap.add_argument(
         "--no-recompute-text", action="store_true",
         help="trust the shipped text column (the scan never reads html)",
@@ -149,7 +148,6 @@ def main() -> None:
         replace(DedupConfig(), **cfg_common),
         args.workdir,
         include_substring=not args.no_substring,
-        substring_partitions=args.substring_partitions,
         recompute_text=not args.no_recompute_text,
     )
     canonical, report = pipe.run(pages, input_desc=args.table or args.input)
