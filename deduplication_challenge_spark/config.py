@@ -57,10 +57,6 @@ class DedupConfig:
                                        # without; the anchor pass ships the
                                        # min_len-char window through the
                                        # anchor shuffle)
-    # --- signatures ---------------------------------------------------------
-    emit_fingerprints: bool = False    # winnowing fingerprints are an optional
-                                       # output (doc-fingerprint op); the dedup
-                                       # pipeline itself never reads them
     # --- consolidation ----------------------------------------------------
     min_group_size: int = 2            # singletons pass through untouched
                                        # (/root/reference/src/main.py:93-95)
@@ -113,8 +109,9 @@ class DedupConfig:
             raise ValueError(
                 f"checkpoint_mode must be 'local' or 'reliable', got {self.checkpoint_mode!r}"
             )
-        # minhash values live in [0, p]; verify ships them as array<int>, so
-        # a larger prime would wrap there and corrupt jaccard_est
+        # minhash values live in [0, p]; the signatures table stores them as
+        # array<int>, so a larger prime would wrap there and corrupt
+        # jaccard_est
         if self.minhash_prime > 2**31 - 1:
             raise ValueError(
                 f"minhash_prime must be <= 2**31 - 1, got {self.minhash_prime}"

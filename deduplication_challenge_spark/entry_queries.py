@@ -768,13 +768,31 @@ def q_embedding_lsh_missed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint cardinality per doc (rows-only)."""
-    from deduplication_challenge_spark.config import DedupConfig
-    from deduplication_challenge_spark.operators.signatures import compute_signatures
+    """Winnowing fingerprint cardinality per doc (rows-only): the default
+    config's shingle hashes through ``hashing.winnow_fingerprints`` in one
+    Arrow pass, without the MinHash/bands/SimHash work of the signatures
+    stage."""
+    import numpy as np
+    import pandas as pd
+
+    from deduplication_challenge_spark.config import DEFAULT_CONFIG as cfg
+    from deduplication_challenge_spark.functions import hashing as H
+    from deduplication_challenge_spark.functions.textnorm import shingles
+
+    def count(batches):
+        for pdf in batches:
+            n = [
+                H.winnow_fingerprints(
+                    H.hash64_batch(shingles(t or "", cfg.shingle_k), seed=cfg.seed)
+                ).size
+                for t in pdf["text"].tolist()
+            ]
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "n_fingerprints": np.asarray(n, dtype=np.int32)}
+            )
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = compute_signatures(d, DedupConfig(emit_fingerprints=True))
-    return sigs.select("doc_id", F.size("fingerprints").alias("n_fingerprints"))
+    return d.mapInPandas(count, schema="doc_id long, n_fingerprints int")
 
 
 def q_label_centroid_dims(spark: SparkSession, sf_dir: str) -> DataFrame:

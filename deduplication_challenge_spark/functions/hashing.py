@@ -1,7 +1,7 @@
 """Deterministic hashing + signature kernels (numpy, vectorized).
 
-Shared by the executor-side Arrow UDFs (operators/minhash.py,
-operators/simhash.py) and the pure-Python test oracle
+Shared by the executor-side Arrow UDFs (operators/signatures.py,
+entry_queries.q_doc_fingerprints) and the pure-Python test oracle
 (deduplication_challenge_spark/oracle.py) — one implementation, identical
 signatures everywhere, so pytest goldens are bitwise stable across
 partitionings and parallelism levels (SURVEY.md §7.4.3 determinism note).
@@ -19,8 +19,7 @@ Design notes
 * SimHash: 64-bit, unweighted bit votes over token hashes via
   ``np.unpackbits`` (no 64x memory blowup from manual shifting).
 * Fingerprints: winnowing (Schleimer et al., SIGMOD 2003) over shingle
-  hashes — used by the document-fingerprint text-analysis op and as the
-  scalable candidate generator companion to the suffix-array pass.
+  hashes — used by the doc_fingerprints query (entry_queries.py).
 """
 
 from __future__ import annotations

@@ -83,6 +83,13 @@ def _local_contract(edges: DataFrame) -> DataFrame:
             if si is None:
                 si = b.schema.get_field_index("src")
                 di = b.schema.get_field_index("dst")
+            # a null endpoint would come out of to_numpy as NaN and then
+            # as a garbage int64 node id, silently merging clusters
+            if b.column(si).null_count or b.column(di).null_count:
+                raise ValueError(
+                    "connected_components: null src/dst edge; edges must "
+                    "carry two non-null doc ids"
+                )
             srcs.append(b.column(si).to_numpy(zero_copy_only=False))
             dsts.append(b.column(di).to_numpy(zero_copy_only=False))
         if not srcs:
@@ -240,7 +247,9 @@ def connected_components(
         # reduction loop below shuffles only the already-contracted set).
         # A first contraction over ONE partition is already the global
         # fixpoint, so the loop is skipped entirely.
-        nz = edges.where(F.col("src") != F.col("dst"))
+        # a null-bearing edge is kept (null != x is null, which where()
+        # would drop silently) so the kernel rejects it loudly
+        nz = edges.where(F.coalesce(F.col("src") != F.col("dst"), F.lit(True)))
         first_parts = nz.rdd.getNumPartitions()
         cur = stage_checkpoint(_local_contract(nz), checkpoint_mode, eager=True)
         # Size-adaptive multi-level contraction (each count is a metadata

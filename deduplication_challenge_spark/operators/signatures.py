@@ -1,11 +1,18 @@
-"""Signature stage: one Arrow pass computing MinHash, LSH band keys, SimHash
-and winnowing fingerprints per document.
+"""Signature stage: one Arrow pass computing MinHash, LSH band keys and
+SimHash per document.
 
 All heavy math is numpy inside ``mapInPandas`` (Arrow-batched, zero per-row
 Python across the JVM boundary — the input_hint's "vectorized pandas/Arrow
 UDFs only" contract). Shingling happens ONCE per doc and feeds all three
 signature families; at 100 TB re-tokenizing per signature type would triple
 the dominant CPU cost.
+
+This module decides the stored signature format: ``minhash`` is
+``array<int>``. Its values live in [0, p] with p <= 2^31 - 1 = int32 max
+(``DedupConfig`` rejects a larger prime), so the narrowing is lossless and
+every verify join (pipeline, incremental cross and new-new) reads the
+stored column without a cast. Band keys are hashed from the int64 kernel
+signature, as the oracle hashes them.
 
 The reference has no signatures (it groups on exact product_identifier,
 /root/reference/src/main.py:85-89); this stage is the north-rule extension
@@ -25,11 +32,9 @@ from deduplication_challenge_spark.functions import hashing as H
 from deduplication_challenge_spark.functions.textnorm import shingles, tokenize
 
 SIGNATURE_SCHEMA = (
-    "doc_id long, n_shingles long, minhash array<long>, bands array<long>, "
-    "simhash long, fingerprints array<long>"
+    "doc_id long, n_shingles long, minhash array<int>, bands array<long>, "
+    "simhash long"
 )
-
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
 
 
 def doc_signatures_pdf(
@@ -51,7 +56,6 @@ def doc_signatures_pdf(
         "minhash": [None] * n,
         "bands": [None] * n,
         "simhash": np.zeros(n, dtype=np.int64),
-        "fingerprints": [None] * n,
     }
     for i, text in enumerate(pdf["text"].tolist()):
         text = text or ""
@@ -59,15 +63,10 @@ def doc_signatures_pdf(
         sh_hashes = H.hash64_batch(sh, seed=cfg.seed)
         out["n_shingles"][i] = len(sh)
         sig = H.minhash_signature(sh_hashes, a, b, cfg.minhash_prime)
-        out["minhash"][i] = sig
+        out["minhash"][i] = sig.astype(np.int32)
         out["bands"][i] = H.band_hashes(sig, cfg.bands, cfg.rows, cfg.seed)
         tok_hashes = H.hash64_batch(tokenize(text), seed=cfg.seed)
         out["simhash"][i] = H.simhash64(tok_hashes)
-        out["fingerprints"][i] = (
-            H.winnow_fingerprints(sh_hashes)
-            if cfg.emit_fingerprints
-            else _EMPTY_I64
-        )
     return pd.DataFrame(out)
 
 

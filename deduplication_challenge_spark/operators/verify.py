@@ -38,21 +38,12 @@ def verify_pairs(
     """pairs(src, dst) -> verified pairs(src, dst, jaccard_est >= threshold).
 
     Two hash joins against the signatures table projected to
-    (doc_id, minhash) — only the signature column shuffles, and the Jaccard
+    (doc_id, minhash) — only the signature column, stored as ``array<int>``
+    (operators/signatures.py), shuffles, and the Jaccard
     filter runs in the join's stage (its higher-order functions interpreted)
     so rejected pairs never materialize downstream.
     """
-    # Shuffle-payload compression (guide §2.3 "shuffle fewer bytes —
-    # narrower types"): minhash values live in [0, p] with p <= 2^31 - 1 =
-    # int32 max (DedupConfig rejects a larger prime), so the join-side
-    # projection casts the int64 array to array<int> — every positional
-    # equality, and therefore jaccard_est, is bit-identical while the
-    # signature payload that crosses BOTH join shuffles halves (~1 KB ->
-    # ~0.5 KB per row at num_perm=128).  The stored signatures table keeps
-    # its int64 schema.
-    sigs = signatures.select(
-        "doc_id", F.transform("minhash", lambda x: x.cast("int")).alias("minhash")
-    )
+    sigs = signatures.select("doc_id", "minhash")
     s1 = sigs.withColumnRenamed("doc_id", "src").withColumnRenamed("minhash", "sig_src")
     s2 = sigs.withColumnRenamed("doc_id", "dst").withColumnRenamed("minhash", "sig_dst")
     # LOUD length guard: mismatched signature widths (e.g. an incremental

@@ -355,7 +355,7 @@ def read_warc_stats(
 
 def write_warc(rows: list[dict], gzip_members: bool = True) -> bytes:
     """pages-style rows -> WARC bytes (response records; test encoder so no
-    external WARC library is needed, mirroring the codec modules).
+    external WARC library is needed).
 
     Optional per-row keys exercise the transport decodings the reader
     undoes: ``content_encoding`` ('gzip'/'deflate') compresses the body and

@@ -56,6 +56,17 @@ def test_negative_ids(spark):
     assert got == {-5: -5, 2: -5, 7: -5}
 
 
+@pytest.mark.parametrize(
+    "edges", [[(1, 2), (3, None)], [(None, 4), (1, 2)]], ids=["null-dst", "null-src"]
+)
+def test_null_edge_fails_loudly(spark, edges):
+    """A null endpoint must raise, not become a NaN-derived node id that
+    silently merges clusters."""
+    df = spark.createDataFrame(edges, "src long, dst long")
+    with pytest.raises(Exception, match="null src/dst edge"):
+        connected_components(df).collect()
+
+
 def test_reliable_checkpoint_mode_identical_output(spark):
     """checkpoint_mode='reliable' (setCheckpointDir + checkpoint(), the
     cluster fault-tolerance mode) must be a pure recovery knob: identical

@@ -97,3 +97,37 @@ def test_tokenizer_class_parity_on_vertical_tab(spark, tmp_path_factory):
     )
     want = con.execute(entry_mod.oracle_sql()["token_stats"]).fetchone()
     assert got["n_tokens"] == want[1]  # (doc_id, n_tokens, ...) parity
+
+
+def test_doc_fingerprints_counts_match_winnowing_kernel(spark, tmp_path_factory):
+    """doc_fingerprints counts the default config's winnowed shingle hashes
+    per doc, the same values as hashing.winnow_fingerprints in Python."""
+    import os
+
+    from deduplication_challenge_spark.config import DEFAULT_CONFIG as cfg
+    from deduplication_challenge_spark.functions import hashing as H
+    from deduplication_challenge_spark.functions.textnorm import shingles
+
+    texts = {
+        0: "one two three four five six seven eight nine ten eleven twelve " * 3,
+        1: "short text only",
+        2: "",
+        3: None,
+        4: "Alpha, beta! GAMMA delta; epsilon zeta eta theta iota kappa lambda",
+    }
+    d = str(tmp_path_factory.mktemp("fp"))
+    spark.createDataFrame(
+        [(k, v, "en", "s0", len(v or "")) for k, v in texts.items()],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(os.path.join(d, "documents.parquet"))
+
+    got = {
+        r["doc_id"]: r["n_fingerprints"]
+        for r in entry_mod.queries()["doc_fingerprints"](spark, d).collect()
+    }
+    want = {
+        k: len(H.winnow_fingerprints(H.hash64_batch(shingles(v or "", cfg.shingle_k), seed=cfg.seed)))
+        for k, v in texts.items()
+    }
+    assert got == want
+    assert got[0] > 1 and got[2] == 0

@@ -407,6 +407,43 @@ class TestManifestIntegrity:
         assert "simhash_hot_keys" in counters and "simhash_chunk_rows" in counters
 
 
+def test_signatures_store_minhash_as_int32(spark, cfg):
+    """The signatures table is the one place that decides the signature
+    format: minhash is array<int> (no fingerprints column), the empty-doc
+    sentinel p = 2**31 - 1 = int32 max survives the narrowing, and band keys
+    are still hashed from the int64 kernel signature, as the oracle does."""
+    import numpy as np
+    from pyspark.sql.types import _parse_datatype_string
+
+    from deduplication_challenge_spark.functions import hashing as H
+    from deduplication_challenge_spark.functions.textnorm import shingles
+    from deduplication_challenge_spark.operators.signatures import (
+        SIGNATURE_SCHEMA,
+        compute_signatures,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame([(1, text), (2, "")], "doc_id long, text string")
+    sigs = compute_signatures(docs, cfg)
+    assert sigs.schema == _parse_datatype_string(SIGNATURE_SCHEMA)
+    assert "fingerprints" not in sigs.columns
+    assert sigs.schema["minhash"].dataType.simpleString() == "array<int>"
+    rows = {r["doc_id"]: r for r in sigs.collect()}
+
+    assert cfg.minhash_prime == 2**31 - 1 == np.iinfo(np.int32).max
+    assert rows[2]["n_shingles"] == 0
+    assert rows[2]["minhash"] == [cfg.minhash_prime] * cfg.num_perm
+
+    a, b = H.minhash_params(cfg.num_perm, cfg.seed, cfg.minhash_prime)
+    sig = H.minhash_signature(
+        H.hash64_batch(shingles(text, cfg.shingle_k), seed=cfg.seed),
+        a, b, cfg.minhash_prime,
+    )
+    assert sig.dtype == np.int64
+    assert rows[1]["minhash"] == sig.tolist()
+    assert rows[1]["bands"] == H.band_hashes(sig, cfg.bands, cfg.rows, cfg.seed).tolist()
+
+
 def test_verify_pairs_signature_width_mismatch_is_loud(spark):
     """Review finding: a signature table built at a different num_perm would
     null-pad through zip_with and silently drop EVERY pair (total recall
@@ -419,7 +456,7 @@ def test_verify_pairs_signature_width_mismatch_is_loud(spark):
     pairs = spark.createDataFrame([(1, 2)], "src long, dst long")
     sigs = spark.createDataFrame(
         [(1, [1, 2, 3, 4]), (2, [1, 2])],  # widths 4 and 2, num_perm=128
-        "doc_id long, minhash array<long>",
+        "doc_id long, minhash array<int>",
     )
     with pytest.raises((PySparkRuntimeError, Py4JJavaError, Exception)) as exc:
         verify_pairs(pairs, sigs, DedupConfig()).collect()
