@@ -845,10 +845,10 @@ def q_consolidated_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_consolidated_product_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8 keyed min/max intervals from the engine output (BOTH branches:
-    grouped aggregate for merged groups AND the shuffle-free per-row
-    passthrough standardization), exploded to oracle-able rows — numeric
-    min/max stringified via _pystr_double, literal fallback included."""
+    """A8 keyed min/max intervals from the engine output, merged groups and
+    passthrough rows alike (both standardized by the same shuffle-free
+    per-row expressions), exploded to oracle-able rows — numeric min/max
+    stringified via _pystr_double, literal fallback included."""
     out = _consolidated(spark, sf_dir)
     pr = out.select("product_identifier", "id", F.explode("price").alias("e")).select(
         "product_identifier", "id", F.lit("price").alias("field"),

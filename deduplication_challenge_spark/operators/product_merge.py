@@ -33,9 +33,11 @@ Deliberate, documented relaxations (SURVEY.md §4.3.3 / §7.5):
     normalization layer never feeds aggregate_into_min_max_intervals a None
     (float(None) would raise an uncaught TypeError there).
 
-Everything is expressed as groupBy aggregations + explode/agg for nested
-fields: one shuffle per nested field family plus one for the main group —
-Catalyst handles partial aggregation; no UDF anywhere in this module.
+A merged group is ONE groupBy on the identifier: the elections, the
+completing unions, and the members' raw nested arrays collected in id
+order, plus the details aggregate joined back.  Nested fields of merged
+groups and passthrough rows are then standardized by the same per-row
+higher-order expressions, with no exchange.  No UDF anywhere in this module.
 """
 
 from __future__ import annotations
@@ -61,6 +63,7 @@ from deduplication_challenge_spark.sources.products import (
 _SCALAR_ELECTED = (
     MERGE_BY_MOST_FREQUENT + MERGE_BY_LEAST_FREQUENT + MERGE_BY_LENGTHIEST_VALUE
 )
+_NESTED_FIELDS = [*INTERVAL_FIELDS, COLOR_FIELD, ENERGY_FIELD]
 
 
 def _valid_identifier() -> Column:
@@ -135,75 +138,33 @@ def _pystr_double(c: Column) -> Column:
     return F.when(in_regime, pretty).otherwise(c.cast("string"))
 
 
-def _interval_agg(
-    products: DataFrame, field: str, keys: list[str], value_col: str, group_col: str
-) -> DataFrame:
-    """A8: explode one interval field, per (group, keys) compute min/max of
-    numeric values; a literal (non-numeric) value survives only for keys with
-    no numeric value, and then exactly ONE literal per key — the reference's
-    dict update keeps the last literal in iteration order
-    (/root/reference/src/controller.py:404-450); we pin "last" to the max
-    (row id, array position), which equals the reference's order when rows
-    are visited by ascending id.  Rows whose value is null are skipped (the
-    reference's normalization never feeds it a None)."""
-    ex = (
-        products.select(
-            F.col(group_col).alias("_g"),
-            F.col("id").alias("_ord"),
-            F.posexplode(field).alias("_pos", "e"),
-        )
-        .select("_g", "_ord", "_pos",
-                *[F.col(f"e.{k}").alias(k) for k in keys],
-                F.col(f"e.{value_col}").alias("_v"))
-    )
-    num = F.col("_v").cast("string").try_cast("double")
-    is_lit = num.isNull() & F.col("_v").isNotNull()
-    grouped = ex.groupBy("_g", *keys).agg(
-        F.min(num).alias("_min"),
-        F.max(num).alias("_max"),
-        # max_by over (is_literal, id, pos): picks the LAST literal when any
-        # literal exists, else null (numeric rows carry a null value expr)
-        F.max_by(
-            F.when(is_lit, F.col("_v").cast("string")),
-            F.struct(is_lit.cast("int"), F.col("_ord"), F.col("_pos")),
-        ).alias("_lit"),
-    )
-    numeric = grouped.where(F.col("_min").isNotNull()).select(
-        "_g", *keys,
-        _pystr_double(F.col("_min")).alias("min"),
-        _pystr_double(F.col("_max")).alias("max"),
-    )
-    literal = grouped.where(F.col("_min").isNull() & F.col("_lit").isNotNull()).select(
-        "_g", *keys, F.col("_lit").alias("min"), F.col("_lit").alias("max")
-    )
-    both = numeric.unionByName(literal)
-    return both.groupBy("_g").agg(
-        F.sort_array(F.collect_list(F.struct(*keys, "min", "max"))).alias(field)
-    )
-
-
 def _try_num(v: Column) -> Column:
     return v.cast("string").try_cast("double")
 
 
 def _row_interval_expr(field: str, keys: list[str], value_col: str, dtype) -> Column:
-    """Per-row, SHUFFLE-FREE equivalent of ``_interval_agg`` for a single
-    product row: identical structs, literal fallback, and ``_pystr_double``
-    formatting (differential-tested against the grouped aggregate).  Used
-    for passthrough standardization — the reference standardizes EVERY
-    output row (/root/reference/src/controller.py:505-526), and on the
-    passthrough side every "group" is one row, so explode->groupBy->join
-    would be 16 wide exchanges doing per-row work at scale (VERDICT r2
-    weak item); higher-order functions do it inside the row's own task."""
+    """A8 over one row's array: per key, min/max of the numeric values,
+    stringified with ``_pystr_double``; a literal (non-numeric) value
+    survives only for keys with no numeric value, and then exactly ONE
+    literal per key — the reference's dict update keeps the last literal in
+    iteration order (/root/reference/src/controller.py:404-450).  "Last" is
+    the last array position; a merged group's array is its members' arrays
+    concatenated by ascending id, which equals the reference's order when
+    rows are visited by ascending id.  Entries whose value is null are
+    skipped (the reference's normalization never feeds it a None).
+
+    Higher-order functions do the work inside the row's own task, with no
+    exchange.  Lambdas get no subexpression elimination, so a first
+    ``transform`` stores each key's raw (min, max, last literal) once and a
+    second one formats those stored fields."""
     arr = F.coalesce(F.col(field), F.array().cast(dtype))
-    # entries with a null value are skipped, as in _interval_agg (a key whose
-    # entries are ALL null-valued disappears entirely)
+    # a key whose entries are ALL null-valued disappears entirely
     ne = F.filter(arr, lambda e: e[value_col].isNotNull())
     key_structs = F.array_distinct(
         F.transform(ne, lambda e: F.struct(*[e[k].alias(k) for k in keys]))
     )
 
-    def per_key(ks: Column) -> Column:
+    def raw(ks: Column) -> Column:
         elems = F.filter(
             ne,
             lambda e: reduce(lambda a, b: a & b, [e[k].eqNullSafe(ks[k]) for k in keys]),
@@ -212,27 +173,33 @@ def _row_interval_expr(field: str, keys: list[str], value_col: str, dtype) -> Co
             F.transform(elems, lambda e: _try_num(e[value_col])),
             lambda x: x.isNotNull(),
         )
-        mn, mx = F.array_min(nums), F.array_max(nums)
-        # last literal by array position == _interval_agg's max_by over
-        # (is_literal, id, pos) when the group is one row
         lit_vals = F.transform(
             F.filter(elems, lambda e: _try_num(e[value_col]).isNull()),
             lambda e: e[value_col].cast("string"),
         )
-        last_lit = F.get(lit_vals, F.size(lit_vals) - 1)  # null-safe on empty
-        fields = [ks[k].alias(k) for k in keys]
-        return F.when(
-            mn.isNotNull(),
-            F.struct(*fields, _pystr_double(mn).alias("min"), _pystr_double(mx).alias("max")),
-        ).otherwise(F.struct(*fields, last_lit.alias("min"), last_lit.alias("max")))
+        return F.struct(
+            *[ks[k].alias(k) for k in keys],
+            F.array_min(nums).alias("_min"),
+            F.array_max(nums).alias("_max"),
+            F.try_element_at(lit_vals, F.lit(-1)).alias("_lit"),  # null on empty
+        )
 
-    out = F.sort_array(F.transform(key_structs, per_key))
-    # no surviving keys -> NULL, matching the grouped version's left join
-    return F.when(F.size(key_structs) > 0, out)
+    def formatted(r: Column) -> Column:
+        fields = [r[k].alias(k) for k in keys]
+        return F.when(
+            r["_min"].isNotNull(),
+            F.struct(*fields, _pystr_double(r["_min"]).alias("min"),
+                     _pystr_double(r["_max"]).alias("max")),
+        ).otherwise(F.struct(*fields, r["_lit"].alias("min"), r["_lit"].alias("max")))
+
+    out = F.sort_array(F.transform(F.transform(key_structs, raw), formatted))
+    # no surviving keys -> NULL, never an empty array
+    return F.when(F.exists(arr, lambda e: e[value_col].isNotNull()), out)
 
 
 def _row_color_expr(dtype) -> Column:
-    """Per-row, shuffle-free equivalent of ``_color_agg`` (A10)."""
+    """A10 over one row's array: per original color, the distinct non-null
+    simple colors, sorted and joined with ', '."""
     arr = F.coalesce(F.col(COLOR_FIELD), F.array().cast(dtype))
     originals = F.array_distinct(F.transform(arr, lambda e: e["original"]))
 
@@ -244,19 +211,28 @@ def _row_color_expr(dtype) -> Column:
                         F.filter(arr, lambda e: e["original"].eqNullSafe(o)),
                         lambda e: e["simple"],
                     ),
-                    lambda s: s.isNotNull(),  # collect_set drops nulls
+                    lambda s: s.isNotNull(),
                 )
             )
         )
         return F.struct(o.alias("original"), F.array_join(simples, ", ").alias("simple"))
 
     out = F.sort_array(F.transform(originals, per_orig))
-    return F.when(F.size(originals) > 0, out)
+    return F.when(F.size(arr) > 0, out)
 
 
 def _row_energy_expr(dtype) -> Column:
-    """Per-row, shuffle-free equivalent of ``_energy_agg`` (A9): every entry
-    participates (null values hit the -1.0 sentinel, negatives count)."""
+    """A9 exactly as the reference (/root/reference/src/controller.py:355-402):
+    per entry, entry_max = greatest(-1.0, all percentage values) and
+    entry_min = least(values) or -1.0 when the entry has no numeric value —
+    so negative values participate, and an all-null entry drags the key's min
+    down to -1.0 even when other entries have numerics.  Per (qualitative,
+    standard_label): min of entry-mins, max of entry-maxes, stringified into
+    struct(qualitative, standard_label, min, max) like the reference's
+    output tuples (goldens mirror
+    /root/reference/src/tests/test_units.py::test_aggregate_energy_efficiency).
+    As in ``_row_interval_expr``, each key's raw bounds are computed once
+    and formatted in a second ``transform``."""
     arr = F.coalesce(F.col(ENERGY_FIELD), F.array().cast(dtype))
     key_structs = F.array_distinct(
         F.transform(
@@ -268,7 +244,7 @@ def _row_energy_expr(dtype) -> Column:
         )
     )
 
-    def per_key(ks: Column) -> Column:
+    def raw(ks: Column) -> Column:
         elems = F.filter(
             arr,
             lambda e: e["qualitative"].eqNullSafe(ks["qualitative"])
@@ -278,64 +254,38 @@ def _row_energy_expr(dtype) -> Column:
         def vals(e: Column) -> list[Column]:
             return [e["exact_percentage"], e["max_percentage"], e["min_percentage"]]
 
+        # least/greatest skip nulls; all-null => null => coalesce to the sentinel
         mins = F.transform(elems, lambda e: F.coalesce(F.least(*vals(e)), F.lit(-1.0)))
         maxs = F.transform(elems, lambda e: F.greatest(F.lit(-1.0), *vals(e)))
         return F.struct(
             ks["qualitative"].alias("qualitative"),
             ks["standard_label"].alias("standard_label"),
-            _pystr_double(F.array_min(mins)).alias("min"),
-            _pystr_double(F.array_max(maxs)).alias("max"),
+            F.array_min(mins).alias("_min"),
+            F.array_max(maxs).alias("_max"),
         )
 
-    out = F.sort_array(F.transform(key_structs, per_key))
-    return F.when(F.size(key_structs) > 0, out)
-
-
-def _color_agg(products: DataFrame, group_col: str) -> DataFrame:
-    """A10: per original color, union of simple colors joined ', ' sorted."""
-    ex = products.select(F.col(group_col).alias("_g"), F.explode(COLOR_FIELD).alias("e"))
-    return (
-        ex.groupBy("_g", F.col("e.original").alias("original"))
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("e.simple")), ", ").alias("simple")
+    def formatted(r: Column) -> Column:
+        return F.struct(
+            r["qualitative"].alias("qualitative"),
+            r["standard_label"].alias("standard_label"),
+            _pystr_double(r["_min"]).alias("min"),
+            _pystr_double(r["_max"]).alias("max"),
         )
-        .groupBy("_g")
-        .agg(F.sort_array(F.collect_list(F.struct("original", "simple"))).alias(COLOR_FIELD))
-    )
+
+    out = F.sort_array(F.transform(F.transform(key_structs, raw), formatted))
+    return F.when(F.size(arr) > 0, out)
 
 
-def _energy_agg(products: DataFrame, group_col: str) -> DataFrame:
-    """A9 exactly as the reference (/root/reference/src/controller.py:355-402):
-    per entry, entry_max = greatest(-1.0, all percentage values) and
-    entry_min = least(values) or -1.0 when the entry has no numeric value —
-    so negative values participate, and an all-null entry drags the key's min
-    down to -1.0 even when other entries have numerics.  Per (qualitative,
-    standard_label): min of entry-mins, max of entry-maxes, stringified into
-    struct(qualitative, standard_label, min, max) like the reference's
-    output tuples (goldens mirror
-    /root/reference/src/tests/test_units.py::test_aggregate_energy_efficiency)."""
-    ex = products.select(F.col(group_col).alias("_g"), F.explode(ENERGY_FIELD).alias("e"))
-    vals = [F.col("e.exact_percentage"), F.col("e.max_percentage"), F.col("e.min_percentage")]
-    # least/greatest skip nulls; all-null => null => coalesce to the sentinel
-    entry_min = F.coalesce(F.least(*vals), F.lit(-1.0))
-    entry_max = F.greatest(F.lit(-1.0), *vals)
-    per_key = ex.groupBy(
-        "_g",
-        F.col("e.qualitative").alias("qualitative"),
-        F.col("e.standard_label").alias("standard_label"),
-    ).agg(
-        F.min(entry_min).alias("_mn"),
-        F.max(entry_max).alias("_mx"),
-    )
-    return per_key.select(
-        "_g",
-        F.struct(
-            F.col("qualitative"),
-            F.col("standard_label"),
-            _pystr_double(F.col("_mn")).alias("min"),
-            _pystr_double(F.col("_mx")).alias("max"),
-        ).alias("s"),
-    ).groupBy("_g").agg(F.sort_array(F.collect_list("s")).alias(ENERGY_FIELD))
+def _standardize_nested(rows: DataFrame) -> DataFrame:
+    """Replace every interval field, color and energy_efficiency column of
+    ``rows`` by its standardized form (A8/A9/A10), row by row."""
+    std = {
+        f: _row_interval_expr(f, keys, vcol, rows.schema[f].dataType)
+        for f, (keys, vcol) in INTERVAL_FIELDS.items()
+    }
+    std[COLOR_FIELD] = _row_color_expr(rows.schema[COLOR_FIELD].dataType)
+    std[ENERGY_FIELD] = _row_energy_expr(rows.schema[ENERGY_FIELD].dataType)
+    return rows.withColumns(std)
 
 
 def _details_agg(products: DataFrame) -> DataFrame:
@@ -379,7 +329,7 @@ def _details_agg(products: DataFrame) -> DataFrame:
     arrs.append(
         F.array(_field_entries("manufacturing_year", F.col("manufacturing_year").cast("string")))
     )
-    for f in list(INTERVAL_FIELDS) + [COLOR_FIELD, ENERGY_FIELD]:
+    for f in _NESTED_FIELDS:
         arrs.append(
             F.transform(
                 F.coalesce(F.col(f), F.array().cast(products.schema[f].dataType)),
@@ -419,13 +369,13 @@ def consolidate_products(products: DataFrame) -> DataFrame:
     """A12: one enriched canonical record per mergeable identifier group;
     singleton / invalid-identifier rows pass through standardized
     (/root/reference/src/main.py:76-97)."""
-    meta = attach_group_meta(products)
-    # lazy checkpoint: mergeable feeds the scalar-election groupBy plus
-    # SIX interval aggs, color, energy and details (~10 consumers) — without
-    # it each subtree re-executes the group-size join and the five
-    # frequency joins from scratch
+    # lazy checkpoints: meta feeds the frequencies, the mergeable side and
+    # the passthrough side, and mergeable feeds the main aggregate and the
+    # details aggregate — without them each consumer re-executes the scan,
+    # the group-size join and the five frequency joins from scratch
+    meta = attach_group_meta(products).localCheckpoint(eager=False)
     mergeable = _with_frequencies(
-        meta.where(F.col("is_mergeable")), products
+        meta.where(F.col("is_mergeable")), meta
     ).localCheckpoint(eager=False)
     passthrough = meta.where(~F.col("is_mergeable"))
 
@@ -464,8 +414,10 @@ def consolidate_products(products: DataFrame) -> DataFrame:
     aggs.append(
         F.array_sort(F.collect_set(PAGE_URL)).alias("source_urls")
     )
+    # the group's rows in id order, with the raw nested arrays that are
+    # standardized below exactly like a passthrough row's
     aggs.append(
-        F.sort_array(F.collect_list(F.struct("id", PAGE_URL))).alias("_urls_by_id")
+        F.sort_array(F.collect_list(F.struct("id", PAGE_URL, *_NESTED_FIELDS))).alias("_rows")
     )
     merged = mergeable.groupBy(IDENTIFIER).agg(*aggs)
     # J3: first (by id) url containing the elected root_domain
@@ -475,28 +427,20 @@ def consolidate_products(products: DataFrame) -> DataFrame:
         PAGE_URL,
         F.get(
             F.filter(
-                F.col("_urls_by_id"),
+                F.col("_rows"),
                 lambda s: F.instr(s[PAGE_URL], F.coalesce(F.col("root_domain"), F.lit(""))) > 0,
             ),
             F.lit(0),
         )[PAGE_URL],
-    ).drop("_urls_by_id")
-
-    # --- nested-field aggregations, joined back on the group key ----------
-    for f, (keys, vcol) in INTERVAL_FIELDS.items():
-        merged = merged.join(
-            _interval_agg(mergeable, f, keys, vcol, IDENTIFIER)
-            .withColumnRenamed("_g", IDENTIFIER),
-            IDENTIFIER, "left",
-        )
-    merged = merged.join(
-        _color_agg(mergeable, IDENTIFIER).withColumnRenamed("_g", IDENTIFIER),
-        IDENTIFIER, "left",
     )
-    merged = merged.join(
-        _energy_agg(mergeable, IDENTIFIER).withColumnRenamed("_g", IDENTIFIER),
-        IDENTIFIER, "left",
-    )
+    # each nested field: the members' arrays concatenated in (id, position)
+    # order, a null array read as empty
+    merged = merged.withColumns({
+        f: F.flatten(F.transform(
+            "_rows", lambda r: F.coalesce(r[f], F.array().cast(products.schema[f].dataType))
+        ))
+        for f in _NESTED_FIELDS
+    }).drop("_rows")
     merged = merged.join(_details_agg(mergeable), IDENTIFIER, "left").withColumn(
         # a mergeable group whose detail-eligible fields are ALL null yields
         # no fragment row; the reference still serializes details as '{}'
@@ -504,18 +448,7 @@ def consolidate_products(products: DataFrame) -> DataFrame:
         "details", F.coalesce("details", F.lit("{}"))
     )
 
-    # --- passthrough rows: standardize nested fields PER ROW with
-    # higher-order functions — zero exchanges (every "group" here is a
-    # single row; the grouped aggregates would shuffle the whole passthrough
-    # side 16 times).  Byte-identical to _interval_agg/_color_agg/_energy_agg
-    # on singletons — pinned by the differential test in
-    # tests/test_product_merge.py and the shared e2e goldens.
-    pt = passthrough
-    for f, (keys, vcol) in INTERVAL_FIELDS.items():
-        pt = pt.withColumn(f, _row_interval_expr(f, keys, vcol, passthrough.schema[f].dataType))
-    pt = pt.withColumn(COLOR_FIELD, _row_color_expr(passthrough.schema[COLOR_FIELD].dataType))
-    pt = pt.withColumn(ENERGY_FIELD, _row_energy_expr(passthrough.schema[ENERGY_FIELD].dataType))
-    pt = pt.select(
+    pt = passthrough.select(
         IDENTIFIER, "id", F.lit(1).alias("group_size"),
         *_SCALAR_ELECTED,
         *MERGE_BY_COMPLETING_ARRAYS,
@@ -525,12 +458,16 @@ def consolidate_products(products: DataFrame) -> DataFrame:
         .otherwise(F.array().cast("array<int>")).alias("manufacturing_year"),
         F.array(PAGE_URL).alias("source_urls"),
         F.col(PAGE_URL),
-        *INTERVAL_FIELDS,
-        COLOR_FIELD, ENERGY_FIELD,
+        *_NESTED_FIELDS,
         # the reference initializes details on EVERY row and serializes empty
         # provenance as json.dumps({}) (/root/reference/src/controller.py:652-655)
         F.lit("{}").alias("details"),
     )
     cols = pt.columns
-    return merged.withColumn("group_size", F.col("group_size").cast("int")) \
+    rows = merged.withColumn("group_size", F.col("group_size").cast("int")) \
                  .select(*cols).unionByName(pt)
+    # the reference standardizes EVERY output row
+    # (/root/reference/src/controller.py:505-526): one set of per-row
+    # expressions serves merged groups and passthrough rows alike, with no
+    # exchange
+    return _standardize_nested(rows)

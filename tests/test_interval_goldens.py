@@ -4,80 +4,42 @@ test_aggregate_purity_no_conflict, test_aggregate_purity_conflict,
 test_aggregate_size, test_aggregate_prices, test_aggregate_energy_efficiency,
 test_aggregate_production_capacity) — same inputs, same expected
 key/min/max tuples, including the reference's str(float) formatting
-("400000000.0", not "4.0E8")."""
+("400000000.0", not "4.0E8").  Each case runs through
+``consolidate_products`` as ONE mergeable group, so the goldens pin the
+path that ships."""
 
-import pytest
-import pyspark.sql.types as T
 from pyspark.sql import functions as F
 
-from deduplication_challenge_spark.operators.product_merge import (
-    _energy_agg,
-    _interval_agg,
-)
-
-RATED = T.StructType([
-    T.StructField("qualitative", T.BooleanType()),
-    T.StructField("type", T.StringType()),
-    T.StructField("unit", T.StringType()),
-    T.StructField("value", T.StringType()),
-])
-SIZE = T.StructType([
-    T.StructField("dimension", T.StringType()),
-    T.StructField("qualitative", T.BooleanType()),
-    T.StructField("type", T.StringType()),
-    T.StructField("unit", T.StringType()),
-    T.StructField("value", T.StringType()),
-])
-PRICE = T.StructType([
-    T.StructField("amount", T.DoubleType()),
-    T.StructField("currency", T.StringType()),
-    T.StructField("type", T.StringType()),
-])
-CAPACITY = T.StructType([
-    T.StructField("quantity", T.LongType()),
-    T.StructField("time_frame", T.StringType()),
-    T.StructField("type", T.StringType()),
-    T.StructField("unit", T.StringType()),
-])
-ENERGY = T.StructType([
-    T.StructField("exact_percentage", T.DoubleType()),
-    T.StructField("max_percentage", T.DoubleType()),
-    T.StructField("min_percentage", T.DoubleType()),
-    T.StructField("qualitative", T.StringType()),
-    T.StructField("standard_label", T.StringType()),
-])
+from deduplication_challenge_spark.operators.product_merge import consolidate_products
+from deduplication_challenge_spark.sources.products import INTERVAL_FIELDS, PRODUCTS_SCHEMA
 
 
-def _run_interval(spark, rows, elem_schema, keys, vcol):
-    """rows: list of per-product entry lists; each product gets id = index."""
-    schema = T.StructType([
-        T.StructField("id", T.LongType(), False),
-        T.StructField("fld", T.ArrayType(elem_schema)),
-    ])
-    df = spark.createDataFrame(
-        [(i + 1, entries) for i, entries in enumerate(rows)], schema
-    ).withColumn("_grp", F.lit("g"))
-    out = _interval_agg(df, "fld", keys, vcol, "_grp").collect()
-    assert len(out) <= 1
-    if not out:
-        return set()
-    return {tuple(e[k] for k in keys) + (e["min"], e["max"]) for e in out[0]["fld"]}
+def _merged(spark, field, rows):
+    """rows: one entry list (or None) per product; product i gets id i + 1.
+    All products share one identifier; a one-product case gets a second
+    member whose field is null, which contributes no entries."""
+    if len(rows) < 2:
+        rows = rows + [None]
+    base = {f.name: None for f in PRODUCTS_SCHEMA.fields}
+    data = [
+        tuple({**base, "id": i + 1, "product_identifier": "GOLDEN", field: entries}[f.name]
+              for f in PRODUCTS_SCHEMA.fields)
+        for i, entries in enumerate(rows)
+    ]
+    out = consolidate_products(spark.createDataFrame(data, PRODUCTS_SCHEMA)).collect()
+    assert len(out) == 1 and out[0]["group_size"] == len(rows)
+    return out[0][field] or []
+
+
+def _run_interval(spark, field, rows):
+    keys, _vcol = INTERVAL_FIELDS[field]
+    return {tuple(e[k] for k in keys) + (e["min"], e["max"]) for e in _merged(spark, field, rows)}
 
 
 def _run_energy(spark, rows):
-    schema = T.StructType([
-        T.StructField("id", T.LongType(), False),
-        T.StructField("energy_efficiency", T.ArrayType(ENERGY)),
-    ])
-    df = spark.createDataFrame(
-        [(i + 1, entries) for i, entries in enumerate(rows)], schema
-    ).withColumn("_grp", F.lit("g"))
-    out = _energy_agg(df, "_grp").collect()
-    if not out:
-        return set()
     return {
         (e["qualitative"], e["standard_label"], e["min"], e["max"])
-        for e in out[0]["energy_efficiency"]
+        for e in _merged(spark, "energy_efficiency", rows)
     }
 
 
@@ -89,7 +51,7 @@ def test_aggregate_purity_no_conflict(spark):
          (True, "exact", None, "high"),
          (False, "exact", None, "89.998")],
     ]
-    assert _run_interval(spark, rows, RATED, ["qualitative", "unit"], "value") == {
+    assert _run_interval(spark, "purity", rows) == {
         (True, None, "high", "high"),
         (False, None, "89.998", "99.998"),
     }
@@ -104,7 +66,7 @@ def test_aggregate_purity_conflict(spark):
          (False, "exact", None, "high"),
          (False, "exact", None, "89.998")],
     ]
-    assert _run_interval(spark, rows, RATED, ["qualitative", "unit"], "value") == {
+    assert _run_interval(spark, "purity", rows) == {
         (False, None, "89.998", "99.998"),
     }
 
@@ -118,7 +80,7 @@ def test_aggregate_size(spark):
          ("Weight", False, "exact", "lbs", "120")],
         [("Height", False, "exact", "cm", "209")],
     ]
-    assert _run_interval(spark, rows, SIZE, ["dimension", "unit"], "value") == {
+    assert _run_interval(spark, "size", rows) == {
         ("Weight", "lbs", "120.0", "190.0"),
         ("Height", "in", "20.7", "30.7"),
         ("Height", "cm", "209.0", "209.0"),
@@ -134,7 +96,7 @@ def test_aggregate_prices(spark):
         [(140.0, "EUR", "exact")],
         [(123.0, "EUR", "min"), (1975.9100341796875, "AUD", "max")],
     ]
-    assert _run_interval(spark, rows, PRICE, ["currency"], "amount") == {
+    assert _run_interval(spark, "price", rows) == {
         ("EUR", "123.0", "140.0"),
         ("AUD", "1796.280029296875", "1975.9100341796875"),
     }
@@ -148,7 +110,7 @@ def test_aggregate_production_capacity(spark):
         [(1000, "Day", "exact", "Kilograms")],
         [(60, "Year", "min", "Tons"), (70, "Year", "max", "Tons")],
     ]
-    assert _run_interval(spark, rows, CAPACITY, ["time_frame", "unit"], "quantity") == {
+    assert _run_interval(spark, "production_capacity", rows) == {
         ("Month", "Units", "60000.0", "60000.0"),
         ("Day", "Kilograms", "1000.0", "1000.0"),
         ("Year", "Tons", "60.0", "70.0"),

@@ -4,6 +4,7 @@ port of the reference's per-policy integration tests
 hand-built fixture (ids 10/20/30 share identifier 'CAS-0001')."""
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -224,6 +225,19 @@ class TestDeterminism:
         again = {r["id"]: r for r in consolidate_products(df).collect()}
         for rid, row in result.items():
             assert row.asDict(True) == again[rid].asDict(True), rid
+
+
+class TestPlanShape:
+    def test_merged_side_is_one_aggregate(self, spark):
+        """The merged side standardizes nested fields with the same per-row
+        expressions as the passthrough side: no per-field aggregate joined
+        back on the identifier, and no per-field explode.  The one join left
+        attaches the details aggregate, whose explode is the one Generate."""
+        df = consolidate_products(spark.createDataFrame(FIXTURE, PRODUCTS_SCHEMA))
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        ops = [re.sub(r"^[\s:+\-|]*", "", line).split(" ")[0] for line in plan.splitlines()]
+        assert ops.count("Join") <= 1, plan
+        assert ops.count("Generate") <= 1, plan
 
 
 class TestProbes:

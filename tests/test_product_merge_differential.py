@@ -103,19 +103,76 @@ def make_corpus():
 # independent pandas oracle of the policy spec
 # ---------------------------------------------------------------------------
 
-def pandas_oracle(rows):
-    freqs = {
-        f: Counter(r[f] for r in rows)
-        for f in MERGE_BY_MOST_FREQUENT + MERGE_BY_LEAST_FREQUENT
-    }
+def _valid_groups(rows):
     groups = defaultdict(list)
     for r in rows:
         pid = r["product_identifier"]
         if pid and pid != "SKU: Not Available":
             groups[pid].append(r)
+    return groups
 
+
+def oracle_nested(members):
+    """A8/A9/A10 over ``members`` (sorted by id): the standardized interval
+    fields, color and energy_efficiency, as sorted tuples.  A passthrough
+    row is the one-member case."""
     out = {}
-    for pid, members in groups.items():
+    # intervals (A8, reference controller.py:404-450): per key, numeric
+    # min/max stringified; literal fallback only when no numeric for that
+    # key, keeping ONE literal per key (last write in id/position order)
+    for f, (keys, vcol) in INTERVAL_FIELDS.items():
+        per_key = defaultdict(lambda: {"nums": [], "lit": None})
+        for r in members:  # members already sorted by id
+            for e in r[f] or []:
+                k = tuple(e.get(c) for c in keys)
+                v = e.get(vcol)
+                if v is None:
+                    continue
+                try:
+                    per_key[k]["nums"].append(float(v))
+                except (TypeError, ValueError):
+                    per_key[k]["lit"] = str(v)
+        items = []
+        for k, d in per_key.items():
+            if d["nums"]:
+                items.append((*k, str(min(d["nums"])), str(max(d["nums"]))))
+            elif d["lit"] is not None:
+                items.append((*k, d["lit"], d["lit"]))
+        out[f] = sorted(items, key=lambda t: tuple((x is not None, x) for x in t))
+    # color rollup (A10)
+    per_orig = defaultdict(set)
+    for r in members:
+        for e in r["color"] or []:
+            per_orig[e["original"]].add(e["simple"])
+    out["color"] = sorted((o, ", ".join(sorted(s))) for o, s in per_orig.items())
+    # energy (A9, reference controller.py:355-402): per entry
+    # min=least(values) or -1.0, max=greatest(-1.0, values); negatives
+    # participate; an all-null entry drags the key's min to -1.0
+    per_el = {}
+    for r in members:
+        for e in r["energy_efficiency"] or []:
+            vals = [v for v in (e["exact_percentage"], e["max_percentage"], e["min_percentage"])
+                    if v is not None]
+            emin = min(vals) if vals else -1.0
+            emax = max([-1.0] + vals)
+            key = (e["qualitative"], e["standard_label"])
+            if key in per_el:
+                per_el[key] = (min(per_el[key][0], emin), max(per_el[key][1], emax))
+            else:
+                per_el[key] = (emin, emax)
+    out["energy_efficiency"] = sorted(
+        (q, l, str(mn), str(mx)) for (q, l), (mn, mx) in per_el.items()
+    )
+    return out
+
+
+def pandas_oracle(rows):
+    freqs = {
+        f: Counter(r[f] for r in rows)
+        for f in MERGE_BY_MOST_FREQUENT + MERGE_BY_LEAST_FREQUENT
+    }
+    out = {}
+    for pid, members in _valid_groups(rows).items():
         if len(members) < 2:
             continue
         members = sorted(members, key=lambda r: r["id"])
@@ -141,52 +198,7 @@ def pandas_oracle(rows):
         rec["source_urls"] = sorted({r["page_url"] for r in members})
         rd = rec.get("root_domain") or ""
         rec["page_url"] = next((r["page_url"] for r in members if rd in r["page_url"]), None)
-        # intervals (A8, reference controller.py:404-450): per key, numeric
-        # min/max stringified; literal fallback only when no numeric for that
-        # key, keeping ONE literal per key (last write in id/position order)
-        for f, (keys, vcol) in INTERVAL_FIELDS.items():
-            per_key = defaultdict(lambda: {"nums": [], "lit": None})
-            for r in members:  # members already sorted by id
-                for e in r[f] or []:
-                    k = tuple(e.get(c) for c in keys)
-                    v = e.get(vcol)
-                    if v is None:
-                        continue
-                    try:
-                        per_key[k]["nums"].append(float(v))
-                    except (TypeError, ValueError):
-                        per_key[k]["lit"] = str(v)
-            items = []
-            for k, d in per_key.items():
-                if d["nums"]:
-                    items.append((*k, str(min(d["nums"])), str(max(d["nums"]))))
-                elif d["lit"] is not None:
-                    items.append((*k, d["lit"], d["lit"]))
-            rec[f] = sorted(items, key=lambda t: tuple((x is not None, x) for x in t))
-        # color rollup (A10)
-        per_orig = defaultdict(set)
-        for r in members:
-            for e in r["color"] or []:
-                per_orig[e["original"]].add(e["simple"])
-        rec["color"] = sorted((o, ", ".join(sorted(s))) for o, s in per_orig.items())
-        # energy (A9, reference controller.py:355-402): per entry
-        # min=least(values) or -1.0, max=greatest(-1.0, values); negatives
-        # participate; an all-null entry drags the key's min to -1.0
-        per_el = {}
-        for r in members:
-            for e in r["energy_efficiency"] or []:
-                vals = [v for v in (e["exact_percentage"], e["max_percentage"], e["min_percentage"])
-                        if v is not None]
-                emin = min(vals) if vals else -1.0
-                emax = max([-1.0] + vals)
-                key = (e["qualitative"], e["standard_label"])
-                if key in per_el:
-                    per_el[key] = (min(per_el[key][0], emin), max(per_el[key][1], emax))
-                else:
-                    per_el[key] = (emin, emax)
-        rec["energy_efficiency"] = sorted(
-            (q, l, str(mn), str(mx)) for (q, l), (mn, mx) in per_el.items()
-        )
+        rec.update(oracle_nested(members))
         # details (A11), scalar elections only (nested stringification is
         # engine-formatting; structure checked via the golden test instead);
         # lengthiest-value fields are never recorded (reference
@@ -238,23 +250,48 @@ def test_completing_match(diff):
         assert list(g["source_urls"]) == w["source_urls"], rid
 
 
+def _assert_nested_match(rid, g, w):
+    for f, (keys, _vcol) in INTERVAL_FIELDS.items():
+        g_items = sorted(
+            [(*[e[k] for k in keys], e["min"], e["max"]) for e in (g[f] or [])],
+            key=lambda t: tuple((x is not None, x) for x in t),
+        )
+        assert g_items == w[f], (rid, f, g_items, w[f])
+    g_color = sorted((e["original"], e["simple"]) for e in (g["color"] or []))
+    assert g_color == w["color"], rid
+    g_energy = sorted(
+        (e["qualitative"], e["standard_label"], e["min"], e["max"])
+        for e in (g["energy_efficiency"] or [])
+    )
+    assert g_energy == w["energy_efficiency"], rid
+
+
 def test_intervals_match(diff):
     got, want = diff
     for rid, w in want.items():
-        g = got[rid]
-        for f, (keys, _vcol) in INTERVAL_FIELDS.items():
-            g_items = sorted(
-                [(*[e[k] for k in keys], e["min"], e["max"]) for e in (g[f] or [])],
-                key=lambda t: tuple((x is not None, x) for x in t),
-            )
-            assert g_items == w[f], (rid, f, g_items, w[f])
-        g_color = sorted((e["original"], e["simple"]) for e in (g["color"] or []))
-        assert g_color == w["color"], rid
-        g_energy = sorted(
-            (e["qualitative"], e["standard_label"], e["min"], e["max"])
-            for e in (g["energy_efficiency"] or [])
-        )
-        assert g_energy == w["energy_efficiency"], rid
+        _assert_nested_match(rid, got[rid], w)
+
+
+@pytest.mark.parametrize("singletons", [False, True], ids=["corpus", "singletons"])
+def test_passthrough_nested_match(spark, singletons):
+    """Passthrough rows (a valid identifier with one row, or an invalid
+    identifier) are standardized like a one-member group.  ``singletons``
+    gives every valid row its own identifier, so all 240 rows pass
+    through."""
+    rows = make_corpus()
+    if singletons:
+        for r in rows:
+            if r["product_identifier"] not in ("", "SKU: Not Available"):
+                r["product_identifier"] = f"ONLY-{r['id']}"
+    vals = [tuple(r[f.name] for f in PRODUCTS_SCHEMA.fields) for r in rows]
+    df = spark.createDataFrame(vals, PRODUCTS_SCHEMA)
+    got = {r["id"]: r for r in consolidate_products(df).collect() if r["group_size"] == 1}
+    merged_ids = {m["id"] for ms in _valid_groups(rows).values() if len(ms) > 1 for m in ms}
+    want = {r["id"]: oracle_nested([r]) for r in rows if r["id"] not in merged_ids}
+    assert set(got) == set(want)
+    assert len(want) == (240 if singletons else 6)
+    for rid, w in want.items():
+        _assert_nested_match(rid, got[rid], w)
 
 
 def test_details_scalar_match(diff):
@@ -265,57 +302,6 @@ def test_details_scalar_match(diff):
             assert d.get(f) == vm, (rid, f, d.get(f), vm)
         for f in MERGE_BY_LENGTHIEST_VALUE:
             assert f not in d, (rid, f)
-
-
-def test_row_standardization_equals_grouped_aggregates(spark):
-    """The shuffle-free per-row standardization expressions used on the
-    passthrough side must be BYTE-IDENTICAL to the grouped aggregates
-    (_interval_agg/_color_agg/_energy_agg) when every group is one row —
-    checked field-by-field over the whole seeded random corpus."""
-    from deduplication_challenge_spark.operators.product_merge import (
-        _color_agg,
-        _energy_agg,
-        _interval_agg,
-        _row_color_expr,
-        _row_energy_expr,
-        _row_interval_expr,
-    )
-    from deduplication_challenge_spark.sources.products import (
-        COLOR_FIELD,
-        ENERGY_FIELD,
-    )
-
-    rows = make_corpus()
-    vals = [tuple(r[f.name] for f in PRODUCTS_SCHEMA.fields) for r in rows]
-    df = spark.createDataFrame(vals, PRODUCTS_SCHEMA)
-
-    for f, (keys, vcol) in INTERVAL_FIELDS.items():
-        grouped = {
-            r["_g"]: r[f]
-            for r in _interval_agg(df, f, keys, vcol, "id").collect()
-        }
-        perrow = {
-            r["id"]: r["v"]
-            for r in df.select("id", _row_interval_expr(f, keys, vcol, df.schema[f].dataType).alias("v")).collect()
-        }
-        for rid in perrow:
-            assert perrow[rid] == grouped.get(rid), (f, rid, perrow[rid], grouped.get(rid))
-
-    grouped_c = {r["_g"]: r[COLOR_FIELD] for r in _color_agg(df, "id").collect()}
-    perrow_c = {
-        r["id"]: r["v"]
-        for r in df.select("id", _row_color_expr(df.schema[COLOR_FIELD].dataType).alias("v")).collect()
-    }
-    for rid in perrow_c:
-        assert perrow_c[rid] == grouped_c.get(rid), ("color", rid)
-
-    grouped_e = {r["_g"]: r[ENERGY_FIELD] for r in _energy_agg(df, "id").collect()}
-    perrow_e = {
-        r["id"]: r["v"]
-        for r in df.select("id", _row_energy_expr(df.schema[ENERGY_FIELD].dataType).alias("v")).collect()
-    }
-    for rid in perrow_e:
-        assert perrow_e[rid] == grouped_e.get(rid), ("energy", rid)
 
 
 def test_passthrough_plan_has_no_exchanges(spark):

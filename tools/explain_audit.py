@@ -175,29 +175,32 @@ def main() -> int:
     # 11. passthrough standardization: per-row higher-order functions —
     # ZERO exchanges in the whole standardization subplan (the r2 version
     # shuffled the passthrough side 16 times)
-    from deduplication_challenge_spark.operators.product_merge import (
-        _row_color_expr,
-        _row_energy_expr,
-        _row_interval_expr,
-    )
-    from deduplication_challenge_spark.sources.products import (
-        COLOR_FIELD,
-        ENERGY_FIELD,
-        INTERVAL_FIELDS,
-        PRODUCTS_SCHEMA,
-    )
+    from deduplication_challenge_spark.operators.product_merge import _standardize_nested
+    from deduplication_challenge_spark.sources.products import PRODUCTS_SCHEMA
 
     prod = spark.createDataFrame([], PRODUCTS_SCHEMA)
-    pt = prod
-    for f_, (keys, vcol) in INTERVAL_FIELDS.items():
-        pt = pt.withColumn(f_, _row_interval_expr(f_, keys, vcol, prod.schema[f_].dataType))
-    pt = pt.withColumn(COLOR_FIELD, _row_color_expr(prod.schema[COLOR_FIELD].dataType))
-    pt = pt.withColumn(ENERGY_FIELD, _row_energy_expr(prod.schema[ENERGY_FIELD].dataType))
+    pt = _standardize_nested(prod)
     p = plan_text(pt)
     check(
         "passthrough_standardization",
         "Exchange" not in p,
         "zero exchanges — row-local standardization",
+        p,
+    )
+
+    # 11b. merged side of consolidate_products: ONE aggregate per identifier
+    # group — nested fields go through the same per-row expressions as
+    # check 11, so the optimized plan keeps only the details join and the
+    # details explode (no per-field aggregate joined back, no per-field
+    # explode)
+    from deduplication_challenge_spark.operators.product_merge import consolidate_products
+
+    p = consolidate_products(prod)._jdf.queryExecution().optimizedPlan().toString()
+    ops = [re.sub(r"^[\s:+\-|]*", "", line).split(" ")[0] for line in p.splitlines()]
+    check(
+        "merged_standardization",
+        ops.count("Join") <= 1 and ops.count("Generate") <= 1,
+        f"{ops.count('Join')} join(s), {ops.count('Generate')} generate(s) — one group aggregate",
         p,
     )
 
