@@ -980,12 +980,29 @@ def q_orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from deduplication_challenge_spark.config import DedupConfig
-    from deduplication_challenge_spark.operators.signatures import compute_signatures
+    """Per-doc shingle count and SimHash (rows-only): the signature stage's
+    ``n_shingles`` and ``simhash`` under the default config, in one Arrow
+    pass without its MinHash and band keys."""
+    import numpy as np
+    import pandas as pd
+
+    from deduplication_challenge_spark.config import DEFAULT_CONFIG as cfg
+    from deduplication_challenge_spark.functions import hashing as H
+    from deduplication_challenge_spark.functions.textnorm import shingles, tokenize
+
+    def sig(batches):
+        for pdf in batches:
+            texts = [t or "" for t in pdf["text"].tolist()]
+            n = [len(shingles(t, cfg.shingle_k)) for t in texts]
+            simhash = [H.simhash64(H.hash64_batch(tokenize(t), seed=cfg.seed)) for t in texts]
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                "n_shingles": np.asarray(n, dtype=np.int64),
+                "simhash": np.asarray(simhash, dtype=np.int64),
+            })
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    sigs = compute_signatures(d, DedupConfig())
-    return sigs.select("doc_id", "n_shingles", "simhash")
+    return d.mapInPandas(sig, schema="doc_id long, n_shingles long, simhash long")
 
 
 def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,7 +29,9 @@ import hashlib
 import numpy as np
 
 MERSENNE_31 = np.uint64(2147483647)  # 2^31 - 1
-_MAX_U64 = np.uint64(0xFFFFFFFFFFFFFFFF)
+# shingles per MinHash matrix block: (num_perm x block) uint64 is 1 MiB at
+# 128 permutations, whatever the doc's length
+_MINHASH_BLOCK = 1024
 
 
 def hash64(s: str, seed: int = 0) -> int:
@@ -63,22 +65,26 @@ def minhash_params(num_perm: int, seed: int, prime: int) -> tuple[np.ndarray, np
 def minhash_signature(
     shingle_hashes: np.ndarray, a: np.ndarray, b: np.ndarray, prime: int
 ) -> np.ndarray:
-    """MinHash signature (num_perm int64 values) of one document.
+    """MinHash signature (num_perm int64 values) of one document, reduced
+    over shingle blocks of ``_MINHASH_BLOCK`` so memory does not grow with
+    the doc (min is associative: the result equals one full matrix's).
 
     Empty shingle set -> all values = prime (sentinel that never collides
     with a real signature; such docs never enter LSH, mirroring the
     reference's skip of empty group keys, /root/reference/src/main.py:85-89).
     """
     p = np.uint64(prime)
-    n = a.shape[0]
-    if shingle_hashes.size == 0:
-        return np.full(n, prime, dtype=np.int64)
     h = (shingle_hashes % p).astype(np.uint64)  # (m,)
-    # (n, m) = (a[:,None] * h[None,:] + b[:,None]) % p  — 62-bit safe in uint64
-    prod = a[:, None] * h[None, :]
-    prod += b[:, None]
-    prod %= p
-    return prod.min(axis=1).astype(np.int64)
+    # running min over (n, block) = (a[:,None] * h[None,:] + b[:,None]) % p,
+    # 62-bit safe in uint64; every value is < p, so p is a neutral start
+    # and what an empty shingle set keeps
+    sig = np.full(a.shape[0], p, dtype=np.uint64)
+    for lo in range(0, h.size, _MINHASH_BLOCK):
+        prod = a[:, None] * h[None, lo : lo + _MINHASH_BLOCK]
+        prod += b[:, None]
+        prod %= p
+        np.minimum(sig, prod.min(axis=1), out=sig)
+    return sig.astype(np.int64)
 
 
 def band_hashes(signature: np.ndarray, bands: int, rows: int, seed: int) -> np.ndarray:

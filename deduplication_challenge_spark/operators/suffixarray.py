@@ -13,7 +13,9 @@ of content-defined anchors and joins them globally:
      every ``substr_winnow_window`` consecutive hashes. The hash is
      position-independent and the selection reads only the doc's own text,
      so two docs sharing a run select identical anchor values in it, in
-     any partition or batch.
+     any partition or batch. For the same reason a batch is hashed in
+     pieces of at most ``_CHUNK_CHARS`` chars, and a longer page in
+     overlapping segments, with the rows of one whole-batch pass.
   2. ``substring_pairs_from_anchors``: one equi-join on the anchor value
      (plus the window text when ``substr_verify``), emitting star edges
      per anchor group (min doc_id -> member) — linear even for a
@@ -97,7 +99,7 @@ def _window_eq(codes: np.ndarray, pos_sorted: np.ndarray, min_len: int) -> np.nd
     return eq
 
 
-def _prepare(doc_ids: np.ndarray, texts: list[str], min_len: int):
+def _prepare(texts: list[str]):
     joined = _SEP.join(texts)
     codes = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
     lengths = np.array([len(t) for t in texts], dtype=np.int64)
@@ -114,7 +116,7 @@ def substring_pairs_partition(
     kernel is differentially tested against (tests/test_suffixarray.py)."""
     if len(texts) < 2:
         return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
-    codes, starts, ends = _prepare(doc_ids, texts, min_len)
+    codes, starts, ends = _prepare(texts)
 
     sa = build_suffix_array(codes, max_prefix=min_len)
     owner_all = np.searchsorted(starts, sa, side="right") - 1
@@ -157,15 +159,25 @@ def _uint64_inverse(b: np.uint64) -> np.uint64:
 
 _ROLL_B_INV = _uint64_inverse(_ROLL_B)
 
+# Working-set bounds of the anchor kernel: chars hashed together (a piece),
+# and sliding-window elements per winnowing argmin block.
+_CHUNK_CHARS = 1 << 16
+_WINNOW_BLOCK = 1 << 16
+
 
 def _winnow_positions(h: np.ndarray, owner: np.ndarray, window: int) -> np.ndarray:
     """Content-defined anchor selection (winnowing, Schleimer et al. SIGMOD
     2003), PER DOC: in every sliding window of `window` consecutive
     position-hashes keep the rightmost minimum. Selection depends only on
     the doc's own content, so two docs sharing a long run select the same
-    anchors inside it. Returns indices into h."""
+    anchors inside it. Returns indices into h.
+
+    The argmin runs over the sliding-window view in row blocks of at most
+    ``_WINNOW_BLOCK`` elements, so a doc of m positions costs O(m) memory
+    (its selection), never the m x window copy one argmin would make."""
     keep_idx: list[np.ndarray] = []
     bounds = np.flatnonzero(np.diff(owner)) + 1
+    rows = max(1, _WINNOW_BLOCK // window)
     start = 0
     for end in list(bounds) + [owner.size]:
         seg = h[start:end]
@@ -178,10 +190,15 @@ def _winnow_positions(h: np.ndarray, owner: np.ndarray, window: int) -> np.ndarr
             rel = m - 1 - int(np.argmin(seg[::-1]))
             keep_idx.append(np.array([start + rel], dtype=np.int64))
         else:
-            sw = np.lib.stride_tricks.sliding_window_view(seg, window)
-            rel = window - 1 - np.argmin(sw[:, ::-1], axis=1)
-            sel = np.unique(rel + np.arange(m - window + 1))
-            keep_idx.append(sel + start)
+            rev = np.lib.stride_tricks.sliding_window_view(seg, window)[:, ::-1]
+            n_win = m - window + 1
+            # argmin over the reversed window = distance of the rightmost
+            # minimum from the window's end
+            back = np.empty(n_win, dtype=np.int64)
+            for lo in range(0, n_win, rows):
+                back[lo : lo + rows] = np.argmin(rev[lo : lo + rows], axis=1)
+            sel = np.unique(np.arange(start + window - 1, start + m) - back)
+            keep_idx.append(sel)
         start = end
     return np.concatenate(keep_idx) if keep_idx else np.empty(0, dtype=np.int64)
 
@@ -199,23 +216,35 @@ def _window_hashes(
 
     Rolling hash in O(n), fully vectorized with uint64 wraparound arithmetic:
     prefix[i] = sum_{j<i} (c[j]+1) * B^j;  H(i, L) = (prefix[i+L] - prefix[i]) * B^-i,
-    so H depends only on the window's chars, never on its position."""
-    n = codes.size
-    owner_all = np.searchsorted(starts, np.arange(n), side="right") - 1
-    pos = np.nonzero((ends[owner_all] - np.arange(n)) >= min_len)[0]
+    so H depends only on the window's chars, never on its position.
+    Memory is ~70 B per code plus 8 B per window start."""
+    # each doc's window starts run over [start, end - min_len]
+    counts = np.maximum(ends - starts - min_len + 1, 0)
+    owner = np.repeat(np.arange(starts.size), counts)
+    pos = np.arange(owner.size, dtype=np.int64)
+    pos += np.repeat(starts - (np.cumsum(counts) - counts), counts)
     if pos.size == 0:
         return pos, np.empty(0, dtype=np.uint64), pos
+    n = codes.size
     with np.errstate(over="ignore"):
-        powers = np.empty(n + 1, dtype=np.uint64)
+        powers = np.full(n, _ROLL_B, dtype=np.uint64)
         powers[0] = 1
-        np.cumprod(np.full(n, _ROLL_B, dtype=np.uint64), out=powers[1:])
-        inv_powers = np.empty(n, dtype=np.uint64)
-        inv_powers[0] = 1
-        np.cumprod(np.full(n - 1, _ROLL_B_INV, dtype=np.uint64), out=inv_powers[1:])
+        np.cumprod(powers, out=powers)
         prefix = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum((codes.astype(np.uint64) + np.uint64(1)) * powers[:n], out=prefix[1:])
-        h = (prefix[pos + min_len] - prefix[pos]) * inv_powers[pos]
-    owner = np.searchsorted(starts, pos, side="right") - 1
+        term = codes.astype(np.uint64)
+        term += np.uint64(1)
+        term *= powers
+        np.cumsum(term, out=prefix[1:])
+        del term, powers
+        inv_powers = np.full(n - min_len + 1, _ROLL_B_INV, dtype=np.uint64)
+        inv_powers[0] = 1
+        np.cumprod(inv_powers, out=inv_powers)
+        # hash of every window start in codes, then the ones inside a doc
+        h_all = prefix[min_len:] - prefix[: n + 1 - min_len]
+        h_all *= inv_powers
+        del prefix, inv_powers
+        h = h_all[pos]
+        del h_all
     if winnow_window > 1:
         # anchor sampling: ~2/(W+1) of positions survive; any run shared
         # verbatim for >= min_len + W - 1 chars selects >= 1 common anchor
@@ -245,7 +274,7 @@ def substring_pairs_partition_rolling(
     """
     if len(texts) < 2:
         return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
-    codes, starts, ends = _prepare(doc_ids, texts, min_len)
+    codes, starts, ends = _prepare(texts)
     pos, h, _ = _window_hashes(codes, starts, ends, min_len, winnow_window)
     if pos.size < 2:
         return pd.DataFrame({"src": [], "dst": []}, dtype="int64")
@@ -285,6 +314,56 @@ def substring_pairs_partition_rolling(
     return _emit_runs_direct(pos_sorted, eq, owner, doc_ids)
 
 
+def _segments(texts: list[str], min_len: int, window: int) -> list[tuple[int, int, int]]:
+    """(doc index, first char, end char) of the text spans the anchor kernel
+    hashes, in doc order: a doc whole when it fits in a piece, else in
+    segments of at most ``_CHUNK_CHARS`` chars. A doc's segments own
+    consecutive runs of its winnowing windows, and each carries the
+    ``window - 1`` positions and ``min_len - 1`` chars its last window reads
+    past its run, so consecutive segments overlap by ``window - 1`` positions
+    and together see every window once. Docs shorter than ``min_len`` have
+    no window and no segment."""
+    step = max(_CHUNK_CHARS - (window - 1) - (min_len - 1), 1)
+    segs = []
+    for d, text in enumerate(texts):
+        if len(text) < min_len:
+            continue
+        n_win = len(text) - min_len + 1 - (window - 1)
+        if n_win <= step:
+            segs.append((d, 0, len(text)))
+        else:
+            segs.extend(
+                (d, lo, min(lo + step, n_win) + window + min_len - 2)
+                for lo in range(0, n_win, step)
+            )
+    return segs
+
+
+def _pieces(segs: list[tuple[int, int, int]]) -> Iterator[list[tuple[int, int, int]]]:
+    """Consecutive segments, grouped so each group's joined text (one
+    separator between segments) is at most ``_CHUNK_CHARS`` chars."""
+    piece: list[tuple[int, int, int]] = []
+    chars = 0
+    for seg in segs:
+        if piece and chars + seg[2] - seg[1] > _CHUNK_CHARS:
+            yield piece
+            piece, chars = [], 0
+        piece.append(seg)
+        chars += seg[2] - seg[1] + 1
+    if piece:
+        yield piece
+
+
+def _piece_anchors(
+    texts: list[str], piece: list[tuple[int, int, int]], min_len: int, winnow_window: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc index, position in the doc, hash) of one piece's winnowed windows."""
+    seg_doc, seg_lo = (np.array(c, dtype=np.int64) for c in list(zip(*piece))[:2])
+    codes, starts, ends = _prepare([texts[d][lo:hi] for d, lo, hi in piece])
+    pos, h, owner = _window_hashes(codes, starts, ends, min_len, winnow_window)
+    return seg_doc[owner], pos - starts[owner] + seg_lo[owner], h
+
+
 def _doc_anchor_frame(
     doc_ids: np.ndarray,
     texts: list[str],
@@ -302,13 +381,30 @@ def _doc_anchor_frame(
     ``with_window=True`` (cfg.substr_verify) additionally ships the
     min_len-char window text under each anchor, so the join key becomes
     (anchor, win) — exact char-level verification through the shuffle at
-    ~min_len bytes extra per anchor."""
-    codes, starts, ends = _prepare(doc_ids, texts, min_len)
-    pos, h, owner = _window_hashes(codes, starts, ends, min_len, winnow_window)
-    cols = {"doc_id": doc_ids[owner], "anchor": h.view(np.int64)}
+    ~min_len bytes extra per anchor.
+
+    Memory is bounded whatever the batch or page size: docs are hashed in
+    pieces of at most ``_CHUNK_CHARS`` chars (~5 MB of numpy working set at
+    64 Ki), a longer doc in overlapping segments whose selections are
+    unioned, and winnowing argmins run in blocks of ``_WINNOW_BLOCK``
+    elements. Beyond that the call holds only its output, ~2/(W+1) of the
+    batch's positions. Rows and their order equal those of one
+    ``_window_hashes`` pass over the whole batch."""
+    segs = _segments(texts, min_len, max(winnow_window, 1))
+    parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.uint64))]
+    parts += [_piece_anchors(texts, piece, min_len, winnow_window) for piece in _pieces(segs)]
+    doc, pos, h = map(np.concatenate, zip(*parts))
+    del parts
+    if any(lo for _, lo, _ in segs):
+        # overlapping segments of a long doc select some positions twice:
+        # union them, in (doc, position) order
+        lengths = np.array([len(t) for t in texts], dtype=np.int64)
+        _, first = np.unique(np.cumsum(lengths)[doc] - lengths[doc] + pos, return_index=True)
+        doc, pos, h = doc[first], pos[first], h[first]
+    cols = {"doc_id": doc_ids[doc], "anchor": h.view(np.int64)}
     if with_window:
         cols["win"] = pd.Series(
-            [codes[p : p + min_len].tobytes().decode("utf-32-le") for p in pos],
+            [texts[d][p : p + min_len] for d, p in zip(doc.tolist(), pos.tolist())],
             dtype="object",
         )
     return pd.DataFrame(cols).drop_duplicates()
@@ -379,7 +475,10 @@ def substring_pairs_global(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     positions x 16 bytes (+~min_len chars when substr_verify);
     winnow_window is the shuffle-size vs detection-floor knob (W=16 ->
     ~12% of positions; W=64 -> ~3% with a min_len+63-char floor; W=128 ->
-    ~1.5% with a min_len+127-char floor)."""
+    ~1.5% with a min_len+127-char floor). A Python worker's memory per
+    Arrow batch is fixed by ``_CHUNK_CHARS``, not by the batch or its
+    longest page: ~5 MB of hashing working set plus the batch's anchor rows
+    (``_doc_anchor_frame``)."""
     # lazy checkpoint: anchors feeds BOTH the mins aggregate and the join
     # probe side — without it the corpus is re-hashed and re-winnowed twice
     # (two MapInPandas nodes in the executed plan), doubling the dominant

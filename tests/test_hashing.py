@@ -50,6 +50,17 @@ class TestMinHash:
         assert s1.shape == (CFG.num_perm,)
         assert s1.min() >= 0 and s1.max() < CFG.minhash_prime
 
+    def test_blocked_reduction_equals_one_matrix(self):
+        """A doc with far more shingles than one block: the running min over
+        shingle blocks equals the min of the whole (num_perm x m) matrix."""
+        a, b = H.minhash_params(CFG.num_perm, CFG.seed, CFG.minhash_prime)
+        rng = np.random.Generator(np.random.PCG64(5))
+        sh = rng.integers(0, 2**64 - 1, size=7 * H._MINHASH_BLOCK + 3, dtype=np.uint64)
+        p = np.uint64(CFG.minhash_prime)
+        h = sh % p
+        full = ((a[:, None] * h[None, :] + b[:, None]) % p).min(axis=1).astype(np.int64)
+        assert np.array_equal(H.minhash_signature(sh, a, b, CFG.minhash_prime), full)
+
     def test_empty_sentinel(self):
         a, b = H.minhash_params(CFG.num_perm, CFG.seed, CFG.minhash_prime)
         s = H.minhash_signature(np.empty(0, dtype=np.uint64), a, b, CFG.minhash_prime)

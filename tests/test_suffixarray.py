@@ -1,9 +1,14 @@
 """Substring pass tests: the numpy reference kernels (suffix array and
-rolling hash) and the global anchor pass the pipeline runs."""
+rolling hash), the bounded per-batch anchor kernel, and the global anchor
+pass the pipeline runs."""
+
+import tracemalloc
 
 import numpy as np
+import pandas as pd
 import pytest
 
+from deduplication_challenge_spark.operators import suffixarray as SA
 from deduplication_challenge_spark.operators.suffixarray import (
     build_suffix_array,
     substring_pairs_partition,
@@ -119,6 +124,127 @@ class TestRollingEquivalence:
             a = "x" * pad_a + " " + shared + " endA"
             b = "y" * pad_b + " " + shared + " endB"
             assert _pairs_rolling([1, 2], [a, b], 48, False, 16) == {(1, 2)}
+
+
+def _whole_batch_frame(doc_ids, texts, min_len, window, with_window):
+    """The anchor frame from ONE _window_hashes pass over the whole doc list:
+    the unbounded formula the piecewise kernel must reproduce row for row."""
+    codes, starts, ends = SA._prepare(texts)
+    pos, h, owner = SA._window_hashes(codes, starts, ends, min_len, window)
+    cols = {"doc_id": doc_ids[owner], "anchor": h.view(np.int64)}
+    if with_window:
+        cols["win"] = pd.Series(
+            [codes[p : p + min_len].tobytes().decode("utf-32-le") for p in pos],
+            dtype="object",
+        )
+    return pd.DataFrame(cols).drop_duplicates()
+
+
+def _naive_winnow(h, window):
+    """Rightmost minimum of every window, one window at a time."""
+    m = len(h)
+    if m <= window:
+        return [max(i for i in range(m) if h[i] == min(h))]
+    sel = set()
+    for j in range(m - window + 1):
+        w = h[j : j + window]
+        sel.add(j + max(i for i in range(window) if w[i] == min(w)))
+    return sorted(sel)
+
+
+class TestBoundedAnchorKernel:
+    """_doc_anchor_frame hashes a batch in pieces of at most _CHUNK_CHARS
+    chars and a long doc in overlapping segments; its rows and their order
+    must equal one whole-batch pass, and its memory must not grow with the
+    batch or its longest page."""
+
+    MIN_LEN = 12
+    W = 8
+
+    @staticmethod
+    def _corpus(seed):
+        rng = np.random.Generator(np.random.PCG64(seed))
+        vocab = ["ab", "abc", "bca", "cab", "xyz", "q", "zzzz"]
+
+        def text(n_words):
+            return " ".join(vocab[int(rng.integers(len(vocab)))] for _ in range(n_words))
+
+        texts = [text(int(rng.integers(1, 90))) for _ in range(40)]
+        texts += ["short", "", "tiny doc"]  # shorter than min_len
+        texts += [text(700), "abc" * 600, "ab" * 10 + "a" * 900]  # > a piece
+        texts += [text(int(rng.integers(1, 90))) for _ in range(10)]
+        order = rng.permutation(len(texts))
+        texts = [texts[i] for i in order]
+        ids = rng.choice(10**9, size=len(texts), replace=False).astype(np.int64)
+        return ids, texts
+
+    @pytest.mark.parametrize("with_window", [False, True])
+    @pytest.mark.parametrize("chunk", [60, 97, 256])
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_equals_whole_batch_pass(self, monkeypatch, seed, chunk, with_window):
+        ids, texts = self._corpus(seed)
+        monkeypatch.setattr(SA, "_WINNOW_BLOCK", 40)
+        ref = _whole_batch_frame(ids, texts, self.MIN_LEN, self.W, with_window)
+        monkeypatch.setattr(SA, "_CHUNK_CHARS", chunk)
+        segs = SA._segments(texts, self.MIN_LEN, self.W)
+        assert any(lo > 0 for _, lo, _ in segs)  # some doc is longer than a piece
+        assert len(list(SA._pieces(segs))) > 5  # docs straddle pieces
+        got = SA._doc_anchor_frame(ids, texts, self.MIN_LEN, self.W, with_window)
+        assert len(ref) > 100
+        pd.testing.assert_frame_equal(got, ref)
+
+    @pytest.mark.parametrize("window", [0, 1, 8])
+    def test_every_tail_length(self, monkeypatch, window):
+        """One long doc per window count past a whole number of segments,
+        including tails of fewer than W positions."""
+        rng = np.random.Generator(np.random.PCG64(7))
+        monkeypatch.setattr(SA, "_CHUNK_CHARS", 64)
+        w = max(window, 1)
+        step = 64 - (w - 1) - (self.MIN_LEN - 1)
+        texts = []
+        for k in (1, 2, 3):
+            for tail in range(0, w + 3):
+                n = k * step + tail + (w - 1) + (self.MIN_LEN - 1)
+                texts.append("".join(rng.choice(list("abcab "), size=n)))
+        ids = np.arange(len(texts), dtype=np.int64) + 100
+        got = SA._doc_anchor_frame(ids, texts, self.MIN_LEN, window)
+        ref = _whole_batch_frame(ids, texts, self.MIN_LEN, window, False)
+        pd.testing.assert_frame_equal(got, ref)
+
+    @pytest.mark.parametrize("text", [
+        "abcabcabcabcabcabcabcabcabcabcabcabcabcabc",  # periodic: tied hashes
+        "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa",
+        "abcdefghijklmnopqrstuvwxyz" * 3,
+        "abcabcab",  # fewer positions than the window
+    ])
+    def test_winnow_is_rightmost_minimum(self, monkeypatch, text):
+        """Blocked argmin keeps the rightmost minimum of every window, ties
+        included."""
+        monkeypatch.setattr(SA, "_WINNOW_BLOCK", 24)
+        codes, starts, ends = SA._prepare([text])
+        pos, h, owner = SA._window_hashes(codes, starts, ends, 4, 0)
+        for window in (2, 5, 8, 16):
+            got = SA._winnow_positions(h, owner, window).tolist()
+            assert got == _naive_winnow(h.tolist(), window)
+
+    def test_memory_bounded_by_piece_not_batch(self):
+        """A 2M-char batch holding a 1.2M-char page stays under 32 MB of
+        Python allocations; one whole-batch pass takes over 500 MB."""
+        rng = np.random.Generator(np.random.PCG64(3))
+        vocab = np.array([f"w{i}" for i in range(500)])
+        docs = [" ".join(vocab[rng.integers(500, size=250)]) for _ in range(800)]
+        page = " ".join(vocab[rng.integers(500, size=300_000)])
+        texts = docs[:400] + [page] + docs[400:]
+        assert sum(map(len, texts)) >= 2_000_000 and len(page) >= 1_000_000
+        ids = np.arange(len(texts), dtype=np.int64)
+        tracemalloc.start()
+        try:
+            frame = SA._doc_anchor_frame(ids, texts, 48, 64)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert len(frame) > 10_000
+        assert peak < 32 * 2**20, peak
 
 
 class TestGlobalAnchorPass:
