@@ -7,7 +7,7 @@ single-process pandas product-dedup pipeline, see ``/root/reference/src``),
 re-expressed as idiomatic Spark DataFrame transforms + vectorized Arrow UDFs,
 extended to web-scale near-dup detection per the north rule:
 
-- exact dedup (hash groupBy)                  -> operators.exact
+- full-row perfect-duplicate probe            -> operators.exact
 - k-shingle MinHash + LSH banding             -> operators.signatures / operators.lsh
 - 64-bit SimHash + Hamming refinement         -> operators.simhash
 - exact-substring pass (global anchor join)   -> operators.suffixarray

@@ -66,8 +66,12 @@ class DedupConfig:
                                        # failure — right for local[*]);
                                        # 'reliable': setCheckpointDir +
                                        # checkpoint() for the CC fixpoint
-                                       # loop and the global-anchor
-                                       # materialization, so an executor
+                                       # loop, the global-anchor
+                                       # materialization and the
+                                       # candidates stage's LSH bucket and
+                                       # SimHash chunk-count aggregates
+                                       # (plus the incremental delta's
+                                       # pins), so an executor
                                        # loss recovers instead of killing
                                        # the query (the cluster-scale mode;
                                        # plans/checkpointing.py).  Identical

@@ -44,8 +44,7 @@ def q_prefix40_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix (A12 analog, S1 scan).  Named for what it computes: docs sharing a
     prefix, a non-vacuous probe on driver data (full texts are all distinct
     at sf0.01; prefixes collide).  TRUE exact-text grouping is covered by
-    exact_dedup_canonical / perfect_duplicate_count and by the real operator
-    in operators/exact.py."""
+    exact_dedup_canonical / perfect_duplicate_count."""
     return (
         _t(spark, sf_dir, "documents")
         .where(F.length(F.trim("text")) > 0)

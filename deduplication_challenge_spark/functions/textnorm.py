@@ -129,12 +129,6 @@ def resolve_charset(data: bytes, charset_hint: str | None = None) -> str:
     return sniff_charset(data) or "utf-8"
 
 
-def decode_html_bytes(data: bytes, charset_hint: str | None = None) -> str:
-    """Charset-aware decode with replacement — deterministic for any byte
-    input (unknown declared charsets fall back to utf-8/replace)."""
-    return data.decode(resolve_charset(data, charset_hint), errors="replace")
-
-
 def extract_text(html_bytes: bytes, charset_hint: str | None = None) -> str:
     """Deterministic text extraction. bytes -> str, total function.
 

@@ -1,40 +1,15 @@
-"""Exact deduplication: hash-groupBy on content.
+"""Exact deduplication: the full-row perfect-duplicate probe.
 
-The closest direct analog of the reference's pipeline (group on exact
-product_identifier, /root/reference/src/main.py:76-97) applied to text
-content: rows with byte-identical text form a duplicate group. Entirely
-JVM-side (sha2 + hash aggregate inside whole-stage codegen) — no UDF, one
-shuffle. Also exposed as edges so exact groups can feed the same CC +
-consolidation path as near-dup candidates.
+A hash-groupBy on the row's columns, entirely JVM-side (hash aggregate
+inside whole-stage codegen) — no UDF, one shuffle.  The pipeline has no
+separate exact-text pass: byte-identical docs have identical signatures,
+so LSH + verify already cluster them (plans/pipeline.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _hashed(docs: DataFrame) -> DataFrame:
-    """THE exact-duplicate key rule, in one place: sha2 over raw text,
-    empty/whitespace-only rows excluded (analog of the reference's skip of
-    empty identifiers, /root/reference/src/main.py:85-89).  Shared by
-    groups and edges so the rule can never drift between them."""
-    return docs.where(F.length(F.trim(F.col("text"))) > 0).select(
-        F.sha2(F.col("text"), 256).alias("text_hash"), "doc_id"
-    )
-
-
-def exact_dup_groups(docs: DataFrame) -> DataFrame:
-    """docs(doc_id, text) -> (text_hash, group_size, canonical_doc_id)."""
-    return (
-        _hashed(docs)
-        .groupBy("text_hash")
-        .agg(
-            F.count("*").alias("group_size"),
-            F.min("doc_id").alias("canonical_doc_id"),
-        )
-        .where(F.col("group_size") >= 2)
-    )
 
 
 def perfect_duplicate_count(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -57,17 +32,3 @@ def perfect_duplicate_count(df: DataFrame, cols: list[str] | None = None) -> Dat
         .agg(F.coalesce(F.sum(F.col("n") - 1), F.lit(0)).alias("n_perfect_duplicates"))
     )
 
-
-def exact_dup_edges(docs: DataFrame) -> DataFrame:
-    """Star edges (group-min doc_id -> member) per exact-dup group; same
-    linear-output shape as operators/lsh.py so boilerplate-heavy exact
-    groups can never blow up quadratically."""
-    hashed = _hashed(docs)
-    mins = hashed.groupBy("text_hash").agg(
-        F.min("doc_id").alias("src"), F.count("*").alias("group_size")
-    )
-    return (
-        hashed.join(mins.where(F.col("group_size") >= 2), "text_hash")
-        .where(F.col("doc_id") != F.col("src"))
-        .select("src", F.col("doc_id").alias("dst"))
-    )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplication_challenge_spark.config import DedupConfig
+from deduplication_challenge_spark.plans.checkpointing import stage_checkpoint
 
 
 def band_table(signatures: DataFrame) -> DataFrame:
@@ -42,9 +43,12 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, Data
     # lazy checkpoint: the bucket aggregate feeds the edge join AND the
     # stats frame (collected later for the stage manifest) — one shuffle
     # instead of re-aggregating the band table for the counters pass
-    buckets = bands.groupBy("band_idx", "band_hash").agg(
-        F.min("doc_id").alias("root"), F.count("*").alias("bucket_size")
-    ).localCheckpoint(eager=False)
+    buckets = stage_checkpoint(
+        bands.groupBy("band_idx", "band_hash").agg(
+            F.min("doc_id").alias("root"), F.count("*").alias("bucket_size")
+        ),
+        cfg,
+    )
     stats = buckets.agg(
         F.count("*").alias("buckets"),
         F.sum((F.col("bucket_size") >= 2).cast("long")).alias("multi_buckets"),

@@ -27,13 +27,12 @@ preserved; only redundant intra-clique edges are dropped.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from deduplication_challenge_spark.config import DedupConfig
+from deduplication_challenge_spark.plans.checkpointing import stage_checkpoint
 
 # structural, not tunable: functions/hashing.simhash64, the oracle's
 # hamming_chunks and the hot-group salt shift all assume 64 bits
@@ -77,9 +76,9 @@ def _salted_chunks(chunks: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, Data
     # lazy checkpoint: the per-key counts feed the hot-set selection AND the
     # stats frame (collected later for the stage manifest) — one aggregation
     # of the chunk table instead of two
-    counts = chunks.groupBy("chunk_idx", "chunk_val").agg(
-        F.count("*").alias("_n")
-    ).localCheckpoint(eager=False)
+    counts = stage_checkpoint(
+        chunks.groupBy("chunk_idx", "chunk_val").agg(F.count("*").alias("_n")), cfg
+    )
     stats = counts.agg(
         F.sum("_n").alias("chunk_rows"),
         F.count("*").alias("chunk_keys"),

@@ -100,27 +100,6 @@ def _planes_for(dim: int, n_planes: int, n_tables: int, seed: int) -> np.ndarray
     return mat
 
 
-def hyperplane_buckets(
-    embeddings: DataFrame, n_planes: int = 16, seed: int = 42, dim: int | None = None
-) -> DataFrame:
-    """Adds an LSH bucket key: sign bits of dot products with seeded random
-    hyperplanes, packed into a long. Vectorized numpy inside one Arrow UDF;
-    the plane matrix is derived lazily from the batch's own width (``dim``
-    kept as an explicit override), so no metadata job runs per call."""
-
-    @F.pandas_udf(LongType())
-    def bucket_udf(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.vstack(emb.to_numpy()).astype(np.float64)  # (n, dim)
-        planes = _planes_for(dim or mat.shape[1], n_planes, 1, seed)
-        bits = (mat @ planes) > 0  # (n, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return embeddings.withColumn("bucket", bucket_udf("embedding"))
-
-
 def cosine_near_dup_pairs_lsh(
     embeddings: DataFrame,
     threshold: float = 0.35,

@@ -12,8 +12,9 @@ Because edge-generation rules are pinned identically on both sides (star
 edges per LSH bucket, Hamming <= k via pigeonhole, same thresholds), the
 Spark pipeline must reproduce the oracle's cluster assignments exactly —
 the dup-pair recall >= 0.99 gate (BASELINE.json) is then checked against
-these assignments by tests/test_recall.py. Test-scale only: the oracle is
-O(n * num_perm) in memory and single-threaded by design (it mirrors the
+these assignments by tests/test_recall_midscale.py::test_recall_ge_099.
+Test-scale only: the oracle is O(n * num_perm) in memory and
+single-threaded by design (it mirrors the
 reference's single-process execution model, /root/reference/src/main.py).
 """
 

@@ -5,8 +5,14 @@ fastest on a healthy cluster (no distributed write), but an executor loss
 mid-job kills the query instead of recomputing lineage — acceptable on
 local[*], a real fragility for the long CC fixpoint loop and the huge anchor
 intermediate on a 1000-executor cluster.  ``checkpoint_mode='reliable'``
-switches those sites to ``SparkContext.setCheckpointDir`` + ``checkpoint()``
-(HDFS/object-store backed): the materialization survives executor loss and
+switches these pins to ``SparkContext.setCheckpointDir`` +
+``checkpoint()``: the CC loop (operators/connected_components.py), the
+global-anchor table (operators/suffixarray.py, plans/pipeline.py), the
+candidates stage's LSH bucket aggregate (operators/lsh.candidate_pairs) and
+SimHash chunk counts (operators/simhash._salted_chunks), and the incremental
+delta's pins (plans/incremental.py); consolidate's kernel-output pin
+stays executor-local.  Reliable checkpoints are
+HDFS/object-store backed: the materialization survives executor loss and
 lineage is truncated identically, at the cost of a distributed write per
 checkpoint.  Output is identical in both modes (checkpointing never changes
 semantics, only recovery) — tests pin that.

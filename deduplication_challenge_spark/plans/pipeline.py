@@ -350,7 +350,7 @@ class DedupPipeline:
             # NOTE: no separate exact-dup edge source — byte-identical docs
             # have identical signatures, co-bucket in every LSH band, and
             # verify at estimated Jaccard 1.0, so LSH+verify provably covers
-            # them (operators/exact.py stays as the cheap standalone path).
+            # them.
             # The band table is deliberately NOT materialized: it is a
             # posexplode inside whole-stage codegen over the narrow
             # signatures parquet — recomputing it for the stats aggregate

@@ -56,20 +56,6 @@ def test_line_dedup_min_docs_validated():
         replace(DedupConfig(), line_dedup_min_docs=1)
 
 
-def test_stream_duration_parse():
-    import pytest
-
-    from deduplication_challenge_spark.streaming.stream_ops import _duration_ms
-
-    assert _duration_ms("1 hour") == 3_600_000
-    assert _duration_ms("90 seconds") == 90_000
-    assert _duration_ms("2 days") == 172_800_000
-    with pytest.raises(ValueError, match="unsupported duration"):
-        _duration_ms("1h")
-    with pytest.raises(ValueError, match="unsupported duration"):
-        _duration_ms("soon")
-
-
 def test_minhash_prime_bounded_by_int32():
     """The signatures table stores minhash values as array<int>; a larger
     prime would wrap there and corrupt jaccard_est."""

@@ -6,9 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from deduplication_challenge_spark.operators.similarity import (
+    _table_buckets_udf,
     cosine_topk_bruteforce,
     cosine_topk_lsh,
-    hyperplane_buckets,
 )
 
 DIM = 8
@@ -66,11 +66,17 @@ class TestBruteForce:
 
 class TestLSH:
     def test_buckets_deterministic(self, spark, emb_df):
-        b1 = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets(emb_df, 8, 42).collect()}
-        b2 = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets(emb_df, 8, 42).collect()}
-        assert b1 == b2
-        b3 = {r["vec_id"]: r["bucket"] for r in hyperplane_buckets(emb_df, 8, 43).collect()}
-        assert b1 != b3
+        """Seeded planes: the same seed gives the same buckets, another seed
+        other buckets — on the kernel every shipped ANN path buckets with."""
+
+        def buckets(seed):
+            udf = _table_buckets_udf(8, 1, seed)
+            rows = emb_df.select("vec_id", udf("embedding").alias("b")).collect()
+            return {r["vec_id"]: r["b"][0] for r in rows}
+
+        b1 = buckets(42)
+        assert b1 == buckets(42)
+        assert b1 != buckets(43)
 
     def test_planted_neighbors_share_bucket_and_rank1(self, spark, emb_df):
         """Near-identical vectors land in the same hyperplane bucket with

@@ -461,3 +461,47 @@ def test_verify_pairs_signature_width_mismatch_is_loud(spark):
     with pytest.raises((PySparkRuntimeError, Py4JJavaError, Exception)) as exc:
         verify_pairs(pairs, sigs, DedupConfig()).collect()
     assert "signature width" in str(exc.value) or "num_perm" in str(exc.value)
+
+
+def test_candidates_reliable_checkpoint_mode(spark, cfg, tmp_path):
+    """checkpoint_mode='reliable' reaches both candidates-stage pins: the LSH
+    bucket aggregate and the SimHash chunk counts are written to the
+    checkpoint dir, and edges and stats equal local mode's."""
+    from dataclasses import replace
+
+    from deduplication_challenge_spark.operators import lsh, simhash
+    from deduplication_challenge_spark.operators.signatures import compute_signatures
+
+    base = "the quick brown fox jumps over the lazy dog near the old river bank today"
+    texts = [
+        base,
+        base,  # a byte-identical copy: an edge in both branches
+        base.replace("lazy", "sleepy"),
+        "an entirely different document about shuffles, joins and aggregates",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id long, text string")
+    sigs = compute_signatures(docs, cfg)
+
+    def run_lsh(c):
+        edges, stats = lsh.candidate_pairs(lsh.band_table(sigs), c)
+        return sorted(edges.collect()), stats.collect()
+
+    def run_simhash(c):
+        edges, stats = simhash.hamming_pairs(sigs, c)
+        return sorted(edges.collect()), stats.collect()
+
+    # Spark checkpoints into a fresh uuid subdir of the dir it is given
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+
+    def n_rdds():
+        return len(list(tmp_path.glob("*/rdd-*")))
+
+    reliable = replace(cfg, checkpoint_mode="reliable")
+    local_lsh, local_sim = run_lsh(cfg), run_simhash(cfg)
+    assert local_lsh[0] and local_sim[0]  # both branches emit edges here
+    assert n_rdds() == 0
+    assert run_lsh(reliable) == local_lsh
+    after_lsh = n_rdds()
+    assert after_lsh >= 1
+    assert run_simhash(reliable) == local_sim
+    assert n_rdds() > after_lsh
