@@ -14,28 +14,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------------------
-# helpers
-# ---------------------------------------------------------------------------
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _docs_as_dedup_input(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> (doc_id, url, warc_ts, text, lang) without the html
-    round-trip (keeps correctness queries fast and column-pruned)."""
-    return _t(spark, sf_dir, "documents").select(
-        F.col("doc_id"),
-        F.concat(F.lit("https://"), F.col("source"), F.lit(".example/doc/"), F.col("doc_id")).alias("url"),
-        (F.lit("2025-01-01 00:00:00").cast("timestamp")
-         + F.make_interval(secs=F.col("doc_id").cast("double"))).alias("warc_ts"),
-        F.col("text"),
-        F.col("lang"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1005,19 +1005,18 @@ def q_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup cluster assignments (doc_id, cluster_id): the pipeline's
+    candidate and verify rules without the substring pass, then CC."""
     from deduplication_challenge_spark.config import DedupConfig
-    from deduplication_challenge_spark.operators import lsh, simhash as sh
     from deduplication_challenge_spark.operators.connected_components import connected_components
     from deduplication_challenge_spark.operators.signatures import compute_signatures
-    from deduplication_challenge_spark.operators.verify import verify_pairs
+    from deduplication_challenge_spark.plans.pipeline import candidate_edges, verified_edges
 
     cfg = DedupConfig()
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     sigs = compute_signatures(d, cfg).localCheckpoint()
-    pairs, _ = lsh.candidate_pairs(lsh.band_table(sigs), cfg)
-    ver = verify_pairs(pairs, sigs, cfg).select("src", "dst")
-    sim, _ = sh.hamming_pairs(sigs, cfg)
-    return connected_components(ver.unionByName(sim).distinct())
+    candidates, _ = candidate_edges(sigs, None, cfg)
+    return connected_components(verified_edges(candidates, sigs, cfg))
 
 
 def q_canonical_records(spark: SparkSession, sf_dir: str) -> DataFrame:

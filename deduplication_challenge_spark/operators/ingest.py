@@ -22,22 +22,21 @@ from deduplication_challenge_spark.functions.textnorm import extract_text
 
 
 @F.pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
+def extract_text_udf(html: pd.Series, charset: pd.Series = None) -> pd.Series:
     """Vectorized html->text extraction (Arrow-batched; no per-row Python
-    crossing the JVM boundary — the loop runs inside one Arrow batch)."""
-    return html.map(extract_text)
+    crossing the JVM boundary — the loop runs inside one Arrow batch).  The
+    transport (HTTP Content-Type) charset hint rides as an optional second
+    column (sources/warc.py emits it); precedence BOM > hint > <meta
+    charset> > utf-8 lives in functions/textnorm.extract_text — the SAME
+    pure function any pytest oracle calls, so engine and oracle can never
+    disagree on decoding.
 
-
-@F.pandas_udf(StringType())
-def extract_text_charset_udf(html: pd.Series, charset: pd.Series) -> pd.Series:
-    """Charset-aware variant: the transport (HTTP Content-Type) charset hint
-    rides as a second column (sources/warc.py emits it); precedence BOM >
-    hint > <meta charset> > utf-8 lives in functions/textnorm.extract_text —
-    the SAME pure function any pytest oracle calls, so engine and oracle
-    can never disagree on decoding."""
-    return pd.Series(
-        [extract_text(h, c) for h, c in zip(html.tolist(), charset.tolist())]
-    )
+    Called with html alone when pages carry no charset column: Spark then
+    chains it with an html-producing Python UDF (sources/pages._wrap_html)
+    in one eval node, where a second argument, even a null literal, splits
+    them into two, each with its own Python worker per task."""
+    hints = [None] * len(html) if charset is None else charset.tolist()
+    return pd.Series([extract_text(h, c) for h, c in zip(html.tolist(), hints)])
 
 
 def extract_pages(pages: DataFrame, *, recompute_text: bool = True) -> DataFrame:
@@ -52,14 +51,10 @@ def extract_pages(pages: DataFrame, *, recompute_text: bool = True) -> DataFrame
     carry the HTTP-declared encoding) feeds the extraction's charset
     precedence; sources without it decode by BOM/meta-sniff/utf-8 as before.
     """
-    has_charset = "charset" in pages.columns
+    charset = [F.col("charset")] if "charset" in pages.columns else []
     # rows without raw html (already-extracted upstream) trust the shipped
     # text column; extraction runs only where html bytes exist
-    extracted = (
-        extract_text_charset_udf(F.col("html"), F.col("charset"))
-        if has_charset
-        else extract_text_udf(F.col("html"))
-    )
+    extracted = extract_text_udf(F.col("html"), *charset)
     text_col = (
         F.when(F.col("html").isNull(), F.col("text")).otherwise(extracted)
         if recompute_text

@@ -40,15 +40,8 @@ SIGNATURE_SCHEMA = (
 def doc_signatures_pdf(
     pdf: pd.DataFrame, cfg: DedupConfig, a: np.ndarray, b: np.ndarray
 ) -> pd.DataFrame:
-    """Signature computation for one Arrow batch.
-
-    The oracle does NOT call this function — it re-implements the loop
-    inline over the SAME functions/hashing.py kernels (the per-doc dict
-    shape it needs differs from this columnar batch shape).  Parity between
-    the two loops is therefore pinned BEHAVIORALLY by the
-    pipeline-vs-oracle equality tests, not structurally; edits to the
-    signature recipe must land in both places (oracle.py run_oracle) or
-    those tests fail."""
+    """Signature computation for one Arrow batch; the pure-Python oracle
+    (oracle.run_oracle) calls it once over its whole corpus."""
     n = len(pdf)
     out = {
         "doc_id": pdf["doc_id"].to_numpy(),

@@ -43,6 +43,44 @@ def _norm(a):
     )
 
 
+def _exact_topk(joined: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of candidate (query, vector) rows: cosine from the
+    pre-computed norms, then the top ``k`` per query, ties broken on
+    vec_id -> (query_id, vec_id, cosine, rank)."""
+    sim = _dot(F.col("embedding"), F.col("q_emb")) / (F.col("e_norm") * F.col("q_norm"))
+    scored = joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", "cosine", "rank")
+    )
+
+
+def _candidate_stats(joined: DataFrame, embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """One row (n_candidates, n_possible, candidate_fraction) for an ANN
+    candidate join — the no-silent-caps surface for the probe/recall
+    trade."""
+    # the join excludes self-matches (vec_id != query_id), so in-corpus
+    # queries each lose one possible candidate — subtract the overlap or
+    # candidate_fraction can never reach 1.0 even at brute-force coverage
+    overlap = queries.select("vec_id").join(
+        embeddings.select("vec_id"), "vec_id", "left_semi"
+    ).agg(F.count("*").alias("_o"))
+    denom = F.col("_n") * F.col("_q") - F.col("_o")
+    return (
+        joined.agg(F.count("*").alias("n_candidates"))
+        .crossJoin(embeddings.agg(F.count("*").alias("_n")))
+        .crossJoin(queries.agg(F.count("*").alias("_q")))
+        .crossJoin(overlap)
+        .select(
+            "n_candidates",
+            denom.cast("long").alias("n_possible"),
+            F.round(F.col("n_candidates") / denom, 4).alias("candidate_fraction"),
+        )
+    )
+
+
 def cosine_topk_bruteforce(
     embeddings: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
@@ -62,16 +100,7 @@ def cosine_topk_bruteforce(
     )
     e = embeddings.withColumn("e_norm", _norm(F.col("embedding")))
     joined = e.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("query_id"))
-    sim = _dot(F.col("embedding"), F.col("q_emb")) / (F.col("e_norm") * F.col("q_norm"))
-    scored = joined.select(
-        "query_id", "vec_id", F.round(sim, 6).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _exact_topk(joined, k)
 
 
 #: per-executor cache of deterministic hyperplane matrices — planes depend
@@ -401,37 +430,10 @@ def cosine_topk_lsh(
         # the candidate subtree feeds the re-rank AND the stats aggregate —
         # share one materialization instead of bucketing twice
         joined = joined.localCheckpoint(eager=False)
-    sim = _dot(F.col("embedding"), F.col("q_emb")) / (F.col("e_norm") * F.col("q_norm"))
-    scored = joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    result = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    result = _exact_topk(joined, k)
     if not with_stats:
         return result
-    # the join excludes self-matches (vec_id != query_id), so in-corpus
-    # queries each lose one possible candidate — subtract the overlap or
-    # candidate_fraction can never reach 1.0 even at brute-force coverage
-    overlap = queries.select("vec_id").join(
-        embeddings.select("vec_id"), "vec_id", "left_semi"
-    ).agg(F.count("*").alias("_o"))
-    denom = F.col("_n") * F.col("_q") - F.col("_o")
-    stats = (
-        joined.agg(F.count("*").alias("n_candidates"))
-        .crossJoin(embeddings.agg(F.count("*").alias("_n")))
-        .crossJoin(queries.agg(F.count("*").alias("_q")))
-        .crossJoin(overlap)
-        .select(
-            "n_candidates",
-            denom.cast("long").alias("n_possible"),
-            F.round(F.col("n_candidates") / denom, 4).alias(
-                "candidate_fraction"
-            ),
-        )
-    )
-    return result, stats
+    return result, _candidate_stats(joined, embeddings, queries)
 
 
 # ---------------------------------------------------------------------------
@@ -546,33 +548,7 @@ def cosine_topk_ivf(
     joined = e.join(F.broadcast(q), "list_id").where(
         F.col("vec_id") != F.col("query_id")
     )
-    sim = _dot(F.col("embedding"), F.col("q_emb")) / (
-        F.col("e_norm") * F.col("q_norm")
-    )
-    scored = joined.select("query_id", "vec_id", F.round(sim, 6).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    result = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    result = _exact_topk(joined, k)
     if not with_stats:
         return result
-    overlap = queries.select("vec_id").join(
-        embeddings.select("vec_id"), "vec_id", "left_semi"
-    ).agg(F.count("*").alias("_o"))
-    denom = F.col("_n") * F.col("_q") - F.col("_o")
-    stats = (
-        joined.agg(F.count("*").alias("n_candidates"))
-        .crossJoin(embeddings.agg(F.count("*").alias("_n")))
-        .crossJoin(queries.agg(F.count("*").alias("_q")))
-        .crossJoin(overlap)
-        .select(
-            "n_candidates",
-            denom.cast("long").alias("n_possible"),
-            F.round(F.col("n_candidates") / denom, 4).alias("candidate_fraction"),
-        )
-    )
-    return result, stats
+    return result, _candidate_stats(joined, embeddings, queries)

@@ -18,8 +18,9 @@ of content-defined anchors and joins them globally:
      overlapping segments, with the rows of one whole-batch pass.
   2. ``substring_pairs_from_anchors``: one equi-join on the anchor value
      (plus the window text when ``substr_verify``), emitting star edges
-     per anchor group (min doc_id -> member) — linear even for a
-     boilerplate anchor shared by millions of docs, like operators/lsh.py.
+     per anchor group (min doc_id -> member) through ``lsh.star_edges``,
+     the one star rule LSH buckets use too — linear even for a
+     boilerplate anchor shared by millions of docs.
 
 Detection is guaranteed for shared runs of at least
 ``min_len + winnow_window - 1`` chars (111 at the shipped defaults); the
@@ -45,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplication_challenge_spark.config import DedupConfig
+from deduplication_challenge_spark.operators.lsh import star_edges
 
 _SEP = "\x00"
 
@@ -441,17 +443,9 @@ def anchor_table(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def substring_pairs_from_anchors(anchors: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Anchor table -> star edges (min doc per anchor group -> members)."""
-    key = anchor_join_key(cfg)
-    mins = anchors.groupBy(*key).agg(
-        F.min("doc_id").alias("src"), F.count("*").alias("_n")
-    )
-    return (
-        anchors.join(mins.where(F.col("_n") >= 2), key)
-        .where(F.col("doc_id") != F.col("src"))
-        .select("src", F.col("doc_id").alias("dst"))
-        .distinct()
-    )
+    """Anchor table -> star edges (min doc per anchor group -> members),
+    by the same ``lsh.star_edges`` rule as the LSH band buckets."""
+    return star_edges(anchors, anchor_join_key(cfg))
 
 
 def substring_pairs_global(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -463,8 +457,8 @@ def substring_pairs_global(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     Guarantee (winnowing, Schleimer SIGMOD'03): two docs sharing a verbatim
     run >= min_len + winnow_window - 1 chars select at least one common
     anchor inside it.  Edges are star edges per anchor group (min doc_id ->
-    member), linear in group size — a boilerplate anchor shared by millions
-    of docs can never go quadratic (same shape as operators/lsh.py).
+    member, ``lsh.star_edges``), linear in group size — a boilerplate
+    anchor shared by millions of docs can never go quadratic.
     Pairing is by 64-bit hash equality (collision odds ~2^-64 per anchor);
     with cfg.substr_verify=True the min_len-char window text rides along
     and the join key becomes (anchor, win) — exact char-level verification

@@ -4,9 +4,12 @@ Runs the ENTIRE dedup pipeline — extraction, shingles, MinHash, LSH star
 edges, Jaccard verification, SimHash Hamming pairs, (optional) global
 substring pass, connected components (union-find), consolidation — in plain
 Python/pandas on the driver, reusing the exact same kernels the Spark
-operators use (functions/textnorm.py, functions/hashing.py,
+operators use (functions/textnorm.py, the signature stage's
+operators/signatures.doc_signatures_pdf,
 operators/consolidate.consolidate_cluster_pdf,
-operators/suffixarray.substring_pairs_partition_rolling).
+operators/suffixarray.substring_pairs_partition_rolling). The LSH star,
+SimHash window, union-find and consolidation stay plain Python: they are
+the independent reference the Spark edge rules are compared against.
 
 Because edge-generation rules are pinned identically on both sides (star
 edges per LSH bucket, Hamming <= k via pigeonhole, same thresholds), the
@@ -23,13 +26,13 @@ from __future__ import annotations
 from collections import defaultdict
 from dataclasses import dataclass, field
 
-import numpy as np
 import pandas as pd
 
 from deduplication_challenge_spark.config import DedupConfig
 from deduplication_challenge_spark.functions import hashing as H
-from deduplication_challenge_spark.functions.textnorm import extract_text, shingles, tokenize
+from deduplication_challenge_spark.functions.textnorm import extract_text
 from deduplication_challenge_spark.operators.consolidate import consolidate_cluster_pdf
+from deduplication_challenge_spark.operators.signatures import doc_signatures_pdf
 from deduplication_challenge_spark.operators.suffixarray import (
     substring_pairs_partition_rolling,
 )
@@ -211,21 +214,22 @@ def run_oracle(
     if not rows:
         res.canonical = pd.DataFrame()
         return res
+    # signatures by the engine's own per-batch recipe, over the whole corpus
     a, b = H.minhash_params(cfg.num_perm, cfg.seed, cfg.minhash_prime)
+    sigs = doc_signatures_pdf(docs, cfg, a, b)
 
     buckets: dict[tuple[int, int], list[int]] = defaultdict(list)
     simhashes: dict[int, int] = {}
-    for r in rows:
-        sh = shingles(r["text"], cfg.shingle_k)
-        sh_hashes = H.hash64_batch(sh, seed=cfg.seed)
-        sig = H.minhash_signature(sh_hashes, a, b, cfg.minhash_prime)
-        res.signatures[r["doc_id"]] = sig
-        if len(sh) > 0:
-            for band_idx, bh in enumerate(H.band_hashes(sig, cfg.bands, cfg.rows, cfg.seed)):
-                buckets[(band_idx, int(bh))].append(r["doc_id"])
-            simhashes[r["doc_id"]] = H.simhash64(
-                H.hash64_batch(tokenize(r["text"]), seed=cfg.seed)
-            )
+    for doc_id, n_sh, sig, bands, simhash in zip(
+        sigs["doc_id"].tolist(), sigs["n_shingles"].tolist(), sigs["minhash"],
+        sigs["bands"], sigs["simhash"].tolist(),
+    ):
+        res.signatures[doc_id] = sig
+        # empty docs get no bands and no SimHash (operators/lsh.band_table)
+        if n_sh > 0:
+            for band_idx, bh in enumerate(bands):
+                buckets[(band_idx, int(bh))].append(doc_id)
+            simhashes[doc_id] = simhash
 
     # LSH star edges + Jaccard verification (identical rule to operators/lsh.py)
     candidates: set[tuple[int, int]] = set()

@@ -10,8 +10,10 @@ switches these pins to ``SparkContext.setCheckpointDir`` +
 global-anchor table (operators/suffixarray.py, plans/pipeline.py), the
 candidates stage's LSH bucket aggregate (operators/lsh.candidate_pairs) and
 SimHash chunk counts (operators/simhash._salted_chunks), and the incremental
-delta's pins (plans/incremental.py); consolidate's kernel-output pin
-stays executor-local.  Reliable checkpoints are
+delta's pins (plans/incremental.py).  Consolidate's kernel-output pin
+(operators/consolidate.py) and the two pins in
+operators/product_merge.consolidate_products take no ``cfg`` and stay
+executor-local in both modes.  Reliable checkpoints are
 HDFS/object-store backed: the materialization survives executor loss and
 lineage is truncated identically, at the cost of a distributed write per
 checkpoint.  Output is identical in both modes (checkpointing never changes

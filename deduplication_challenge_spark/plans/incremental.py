@@ -28,8 +28,10 @@ Pinned contract:
 
 Scale shape: the cross join touches only LSH band buckets that contain at
 least one NEW doc (the band equi-join prunes the index side); per bucket,
-each new doc pairs with the MINIMUM old doc (star-edge analog, <= bands
-edges per new doc — never |new| x |old|); verification joins project
+each new doc pairs with the MINIMUM old doc (``lsh.cross_star_edges``, the
+incremental form of the pipeline's one star rule: <= bands edges per new
+doc — never |new| x |old|); new-vs-new edges come from the pipeline's own
+``candidate_edges``/``verified_edges``; verification joins project
 signatures to (doc_id, minhash) only.  Old text is re-read ONLY for
 clusters that actually gained members (semi-join prune on the ingest
 table).
@@ -63,6 +65,12 @@ from deduplication_challenge_spark.operators.consolidate import (
 )
 from deduplication_challenge_spark.operators.ingest import extract_pages
 from deduplication_challenge_spark.operators.signatures import compute_signatures
+from deduplication_challenge_spark.operators.suffixarray import anchor_join_key, anchor_table
+from deduplication_challenge_spark.plans.pipeline import (
+    DedupPipeline,
+    candidate_edges,
+    verified_edges,
+)
 
 
 # scheme-preserving path join, shared with plans/pipeline.py
@@ -107,42 +115,22 @@ def _apply_compact_swap(spark: SparkSession, workdir: str, j: dict) -> None:
 
 
 def lsh_cross_candidates(bands_new: DataFrame, bands_old: DataFrame) -> DataFrame:
-    """Cross candidates (src=new, dst=old): band equi-join pruning the index
-    to buckets containing a new doc; min old doc per bucket bounds fan-out
-    at <= bands edges per new doc (the star-edge analog)."""
-    return (
-        bands_new.join(
-            bands_old.groupBy("band_idx", "band_hash").agg(
-                F.min("doc_id").alias("old_doc")
-            ),
-            ["band_idx", "band_hash"],
-        )
-        .select(F.col("doc_id").alias("src"), F.col("old_doc").alias("dst"))
-        .distinct()
-    )
+    """Cross candidates (src=new, dst=old) over LSH band buckets: the star
+    rule's incremental form, ``lsh.cross_star_edges``."""
+    return lsh.cross_star_edges(bands_new, bands_old, ["band_idx", "band_hash"])
 
 
 def substring_cross_candidates(
     anchors_new: DataFrame, anchors_old: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """Delta substring pass: new-batch winnowed anchors equi-joined against
-    the index's persisted anchor table ({workdir}/anchors, written by
-    the pipeline's candidates stage when ``include_substring=True``).
-    Anchors are position- and batch-independent functions of each doc's own
-    content (operators/suffixarray.anchor_table), so a verbatim run shared
-    across batches yields identical anchor values — the cross pass is a
-    plain equi-join, min old doc per anchor bucket (star-edge analog,
-    bounded fan-out), exactly mirroring the full run's pairing rule."""
-    from deduplication_challenge_spark.operators.suffixarray import anchor_join_key
-
-    key = anchor_join_key(cfg)
-    old_min = anchors_old.groupBy(*key).agg(F.min("doc_id").alias("dst"))
-    return (
-        anchors_new.join(old_min, key)
-        .where(F.col("doc_id") != F.col("dst"))
-        .select(F.col("doc_id").alias("src"), "dst")
-        .distinct()
-    )
+    """Delta substring pass: new-batch winnowed anchors joined against the
+    index's persisted anchor table ({workdir}/anchors, written by the
+    pipeline's candidates stage when ``include_substring=True``) by the
+    same ``lsh.cross_star_edges`` rule as the band buckets.  Anchors are
+    position- and batch-independent functions of each doc's own content
+    (operators/suffixarray.anchor_table), so a verbatim run shared across
+    batches yields identical anchor values in both tables."""
+    return lsh.cross_star_edges(anchors_new, anchors_old, anchor_join_key(cfg))
 
 
 def simhash_cross_candidates(
@@ -402,18 +390,13 @@ class IncrementalDedup:
             sigs_new.select("doc_id"), "doc_id", "left_anti"
         )
 
-        bands_new = lsh.band_table(sigs_new)
-        bands_old = lsh.band_table(sigs_old)
-
-        cross = lsh_cross_candidates(bands_new, bands_old)
+        cross = lsh_cross_candidates(lsh.band_table(sigs_new), lsh.band_table(sigs_old))
         sigs_union = sigs_new.unionByName(sigs_old)
         cross_lsh = verify.verify_pairs(cross, sigs_union, cfg).select("src", "dst")
 
-        from deduplication_challenge_spark.operators.simhash import simhash_chunk_table
-
         cross_sim = simhash_cross_candidates(
-            simhash_chunk_table(sigs_new, cfg),
-            simhash_chunk_table(sigs_old, cfg),
+            simhash.simhash_chunk_table(sigs_new, cfg),
+            simhash.simhash_chunk_table(sigs_old, cfg),
             cfg.hamming_k,
         )
         cross_parts = [cross_lsh, cross_sim]
@@ -424,13 +407,8 @@ class IncrementalDedup:
         # scope cut of the incremental path.  Substring pairs are exact by
         # construction (same rule as the batch pipeline): no Jaccard verify.
         substr_active = self._has_anchor_index()
-        nn_substr = None
+        anchors_new = None
         if substr_active:
-            from deduplication_challenge_spark.operators.suffixarray import (
-                anchor_table,
-                substring_pairs_from_anchors,
-            )
-
             anchors_new = stage_checkpoint(anchor_table(docs_new, cfg), cfg)
             self._anchors_new = anchors_new
             anchors_old = self._index("anchors")
@@ -445,7 +423,6 @@ class IncrementalDedup:
                 docs_new.select("doc_id"), "doc_id", "left_anti"
             )
             cross_parts.append(substring_cross_candidates(anchors_new, anchors_old, cfg))
-            nn_substr = substring_pairs_from_anchors(anchors_new, cfg)
 
         # lazy checkpoint: cross_ok feeds the attach join AND two report
         # counters — without it the band join + verify + simhash probe (the
@@ -455,17 +432,9 @@ class IncrementalDedup:
             cross_ok = cross_ok.unionByName(p)
         cross_ok = stage_checkpoint(cross_ok.distinct(), cfg)
 
-        # new-vs-new edges: the standard batch rules at batch scale
-        nn_lsh, _ = lsh.candidate_pairs(bands_new, cfg)
-        nn_sim, _ = simhash.hamming_pairs(sigs_new, cfg)
-        nn_ok = (
-            verify.verify_pairs(nn_lsh.select("src", "dst"), sigs_new, cfg)
-            .select("src", "dst")
-            .unionByName(nn_sim.select("src", "dst"))
-        )
-        if nn_substr is not None:
-            nn_ok = nn_ok.unionByName(nn_substr.select("src", "dst"))
-        nn_ok = nn_ok.distinct()
+        # new-vs-new edges: the batch pipeline's own edge rules at batch scale
+        nn_candidates, _ = candidate_edges(sigs_new, anchors_new, cfg)
+        nn_ok = verified_edges(nn_candidates, sigs_new, cfg)
         comps = connected_components(
             nn_ok, checkpoint_mode=cfg.checkpoint_mode
         )  # (doc_id, cluster_id) among new
@@ -583,8 +552,6 @@ class IncrementalDedup:
         verifies the counts, instead of refusing a fully-recoverable state.
         All filesystem traffic goes through the Hadoop FS API, so the swap
         works identically on a driver-local dir, HDFS, or an object store."""
-        from deduplication_challenge_spark.plans.pipeline import DedupPipeline
-
         spark = self.spark
         docs = self._index("ingest")
         # old assignments (incl. implicit singletons), materialized EAGERLY:

@@ -60,6 +60,51 @@ STAGES = [
 # parquet write, not a stage boundary + read-back
 
 
+def candidate_edges(
+    sigs: DataFrame, anchors: DataFrame | None, cfg: DedupConfig
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """signatures (+ winnowed anchor table, or None to skip the substring
+    pass) -> (candidate edges(src, dst, origin), {"lsh": stats, "simhash":
+    stats}).
+
+    The one candidate rule of the pipeline, the incremental attach's
+    new-vs-new edges and the near_dup_clusters query: star edges per LSH
+    band bucket, SimHash Hamming pairs, and star edges per anchor group.
+    The stats frames share the checkpointed band/chunk aggregates with the
+    edges, so collecting them after the edges materialize re-derives
+    nothing.
+
+    No separate exact-dup edge source: byte-identical docs have identical
+    signatures, co-bucket in every LSH band, and verify at estimated
+    Jaccard 1.0. The band table is deliberately NOT materialized: it is a
+    posexplode inside whole-stage codegen over the narrow signatures table,
+    cheaper to recompute for the stats aggregate than to store at
+    bands-per-doc times the corpus (16T rows at 10^12 docs)."""
+    lsh_edges, lsh_stats = lsh.candidate_pairs(lsh.band_table(sigs), cfg)
+    sim_edges, sim_stats = simhash.hamming_pairs(sigs, cfg)
+    edges = lsh_edges.select("src", "dst", F.lit("lsh").alias("origin")).unionByName(
+        sim_edges.select("src", "dst", F.lit("simhash").alias("origin"))
+    )
+    if anchors is not None:
+        sub = suffixarray.substring_pairs_from_anchors(anchors, cfg)
+        edges = edges.unionByName(sub.select("src", "dst", F.lit("substring").alias("origin")))
+    return edges, {"lsh": lsh_stats, "simhash": sim_stats}
+
+
+def verified_edges(candidates: DataFrame, sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """candidate edges(src, dst, origin) -> distinct verified edges(src, dst).
+
+    Only LSH candidates need Jaccard verification: substring pairs are
+    exact by construction, SimHash pairs passed their Hamming check. Over a
+    live (unmaterialized) candidate union, Catalyst folds the ``origin``
+    filters into the branches and prunes the rest, so no branch is computed
+    twice."""
+    lsh_pairs = candidates.where(F.col("origin") == "lsh").select("src", "dst")
+    other = candidates.where(F.col("origin") != "lsh").select("src", "dst")
+    ver = verify.verify_pairs(lsh_pairs, sigs, cfg).select("src", "dst")
+    return ver.unionByName(other).distinct()
+
+
 @dataclass
 class StageInfo:
     name: str
@@ -347,23 +392,7 @@ class DedupPipeline:
         stats_holder: dict[str, DataFrame] = {}
 
         def build_candidates() -> DataFrame:
-            # NOTE: no separate exact-dup edge source — byte-identical docs
-            # have identical signatures, co-bucket in every LSH band, and
-            # verify at estimated Jaccard 1.0, so LSH+verify provably covers
-            # them.
-            # The band table is deliberately NOT materialized: it is a
-            # posexplode inside whole-stage codegen over the narrow
-            # signatures parquet — recomputing it for the stats aggregate
-            # is cheaper than storing a bands-per-doc-times-corpus exploded
-            # table (16 rows/doc = 16T rows at 10^12 docs; executor
-            # storage could never hold it, and at 1M the materialization
-            # measurably cost more than the second codegen pass).
-            bands = lsh.band_table(sigs)
-            lsh_edges, stats_holder["lsh"] = lsh.candidate_pairs(bands, cfg)
-            sim_edges, stats_holder["simhash"] = simhash.hamming_pairs(sigs, cfg)
-            lsh_tagged = lsh_edges.select("src", "dst", F.lit("lsh").alias("origin"))
-            sim_tagged = sim_edges.select("src", "dst", F.lit("simhash").alias("origin"))
-            parts = [lsh_tagged, sim_tagged]
+            anchors = None
             if self.include_substring:
                 # the winnowed anchor table is PERSISTED as a side output
                 # ({workdir}/anchors) — it is the substring index the
@@ -377,17 +406,14 @@ class DedupPipeline:
                 # ~0.05
                 anchors = stage_checkpoint(suffixarray.anchor_table(docs, cfg), cfg)
                 anchors.write.mode("overwrite").parquet(anchors_path)
-                sub = suffixarray.substring_pairs_from_anchors(anchors, cfg)
-                parts.append(sub.select("src", "dst", F.lit("substring").alias("origin")))
             elif fs_exists(self.spark, anchors_path):
                 # a previous run with the substring pass left an anchor
                 # table; it no longer matches this run's candidates — remove
                 # it so the incremental path can never join stale anchors
                 fs_delete(self.spark, anchors_path)
-            allp = parts[0]
-            for p in parts[1:]:
-                allp = allp.unionByName(p)
-            return allp
+            edges, stats = candidate_edges(sigs, anchors, cfg)
+            stats_holder.update(stats)
+            return edges
 
         def candidate_counters(df: DataFrame, rows: int) -> dict:
             per_origin = {
@@ -422,17 +448,9 @@ class DedupPipeline:
             candidate_counters,
         )
 
-        def build_verified() -> DataFrame:
-            # only LSH candidates need Jaccard verification; exact/substring
-            # pairs are verified by construction, simhash by Hamming check
-            lsh_pairs = candidates.where(F.col("origin") == "lsh").select("src", "dst")
-            other = candidates.where(F.col("origin") != "lsh").select("src", "dst")
-            ver = verify.verify_pairs(lsh_pairs, sigs, cfg).select("src", "dst")
-            return ver.unionByName(other).distinct()
-
         verified, fp = self._run_stage(
             report, "verify", fp, "pairs",
-            build_verified,
+            lambda: verified_edges(candidates, sigs, cfg),
             lambda df, rows: {"pairs_verified": rows},
         )
 

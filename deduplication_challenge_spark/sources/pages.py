@@ -23,19 +23,19 @@ from pyspark.sql.types import BinaryType
 from deduplication_challenge_spark.functions.textnorm import extract_text
 
 
+def wrap_html(text: str | None) -> bytes:
+    """Deterministic text -> html wrapper markup (one paragraph per line)."""
+    paras = "".join(f"<p>{p}</p>" for p in (text or "").split("\n"))
+    return (
+        f"<html><head><title></title><script>var _=1;</script></head>"
+        f"<body>{paras}</body></html>"
+    ).encode("utf-8")
+
+
 @F.pandas_udf(BinaryType())
 def _wrap_html(text: pd.Series) -> pd.Series:
-    """Deterministic text -> html wrapper (vectorized, Arrow-batched)."""
-
-    def wrap(t: str) -> bytes:
-        t = t or ""
-        paras = "".join(f"<p>{p}</p>" for p in t.split("\n"))
-        return (
-            f"<html><head><title></title><script>var _=1;</script></head>"
-            f"<body>{paras}</body></html>"
-        ).encode("utf-8")
-
-    return text.map(wrap)
+    """``wrap_html`` per row (vectorized, Arrow-batched)."""
+    return text.map(wrap_html)
 
 
 def spread_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -87,10 +87,4 @@ def pages_from_documents(
 def expected_text_oracle(raw_text: str) -> str:
     """What the ingest stage will produce for a document wrapped by
     ``_wrap_html`` — pure-Python oracle for the per-row invariant test."""
-    t = raw_text or ""
-    paras = "".join(f"<p>{p}</p>" for p in t.split("\n"))
-    html = (
-        f"<html><head><title></title><script>var _=1;</script></head>"
-        f"<body>{paras}</body></html>"
-    ).encode("utf-8")
-    return extract_text(html)
+    return extract_text(wrap_html(raw_text))
